@@ -207,15 +207,26 @@ object Dedup {
     * canonical "duplicate cluster" assignment that chains A~B~C into
     * one group even when A and C never pair directly.
     *
-    * Algorithm: iterative min-label propagation with POINTER JUMPING —
-    * each round takes the min over neighbours' labels (one keyed
-    * join + groupBy) and then shortcuts label → label-of-label (one
-    * more keyed join), which collapses chains in O(log diameter)
-    * rounds instead of O(diameter). All joins are equi-joins on node
-    * ids; per-round state is the narrow (id, label) pair set, lineage
-    * is truncated with an eager localCheckpoint, and the loop exits as
-    * soon as a round changes nothing. The driver never sees the data —
-    * only the per-round changed-row COUNT.
+    * Algorithm: iterative min-label propagation with POINTER JUMPING.
+    * The edge table carries both directions plus a SELF-LOOP per node,
+    * so one propagation (label := min over neighbours' labels, the
+    * node's own included) is one keyed join + groupBy. One ROUND is
+    * TWO propagations followed by one pointer jump (label :=
+    * min(label, label-of-label), one more keyed join), which collapses
+    * chains in O(log diameter) rounds instead of O(diameter). All
+    * joins are equi-joins on node ids; per-round state is the narrow
+    * (id, label) pair set. Each round's state is a LAZY snapshot that
+    * truncates lineage, and the round's one action — the exact decimal
+    * SUM of all labels — both materializes it and tests convergence:
+    * labels only ever decrease, so the loop exits on the first round
+    * whose sum is unchanged. The driver never sees the data, only that
+    * sum. With the default localCheckpoint that is one Spark action
+    * per round; a reliable checkpoint (`checkpointDir`) writes its
+    * files in a second job that recomputes the round.
+    *
+    * `maxIters` bounds ROUNDS, not hops: one round is 2 propagations +
+    * 1 jump, so `maxIters = 25` allows up to 50 propagation hops (plus
+    * the jumps' shortcuts) before the loop stops unconverged.
     *
     * `checkpointDir`: localCheckpoint (the default) stores round state
     * in executor block managers — fastest locally, but on a real

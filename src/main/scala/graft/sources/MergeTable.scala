@@ -3,10 +3,18 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Range, Union}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Manifest-based copy-on-write table (SURVEY §2e) — the MERGE/DELETE
   * layer plain parquet directories lack. A table is a directory of
@@ -156,6 +164,11 @@ object MergeTable {
     * rather than let the manifest grow unboundedly under a
     * pure-append + optimize loop. */
   private val MaxLineageUnits = 8192
+
+  /** Files under this size are "small": [[optimize]]'s default
+    * compaction threshold, and the largest rewrite [[merge]] and
+    * [[applyBatch]] write as one file. */
+  private val SmallFileBytes = 16L * 1024 * 1024
 
   /** A manifest entry: a data file plus its [[Stats]], optional
     * DELETION VECTORS (merge-on-read deletes — `dv-*.parquet`
@@ -343,17 +356,6 @@ object MergeTable {
     hook()
   }
 
-  /** Stage a DataFrame as immutable data files: Spark writes into an
-    * invisible `_stage-` dir, then each part renames to a unique
-    * `data-*.parquet` in the table root. When a stats column is
-    * tracked, the staged files are read back ONCE (one scan, grouped
-    * by `_metadata.file_path`) for their true per-file [min, max] —
-    * data-sized work stays in executors; only #files stat rows reach
-    * the driver. A part whose stats column is entirely NULL (or which
-    * holds zero rows) carries the impossible range: it can never hold
-    * a probe hit, so range pruning skips it — never an NPE mid-write.
-    * Until a manifest lists them the files are unreferenced (readers
-    * resolve manifests, never glob data files). */
   /** Write `df` into an invisible `_stage-` dir and rename each part
     * into the table root under `name(i)` — the one staging dance both
     * data files and dv sidecars ride. */
@@ -373,51 +375,151 @@ object MergeTable {
     renamed
   }
 
+  /** Stage a DataFrame as immutable data files: Spark writes into an
+    * invisible `_stage-` dir, then each part renames to a unique
+    * `data-*.parquet` in the table root — ONE Spark write, and no
+    * further job: when a stats column is tracked, each staged file's
+    * true [min, max] comes from the parquet footer the write just
+    * produced ([[fileStats]]), so only footers, never rows, reach the
+    * driver. A part whose stats column is entirely NULL (or which
+    * holds zero rows) carries the impossible range: it can never hold
+    * a probe hit, so range pruning skips it — never an NPE mid-write.
+    * Until a manifest lists them the files are unreferenced (readers
+    * resolve manifests, never glob data files). */
   private def stage(df: DataFrame, dir: Path, fs: FileSystem,
                     statsCol: Option[String]): Seq[Entry] = {
     val renamed = stageParts(df, dir, fs,
       i => s"data-${UUID.randomUUID()}-$i.parquet")
     statsCol match {
       case None => renamed.map(Entry(_, NoStats))
-      case Some(_) if renamed.isEmpty => Seq.empty
       case Some(c) =>
-        val isStr = df.schema(c).dataType == org.apache.spark.sql.types.StringType
-        val stats = df.sparkSession.read
-          .parquet(renamed.map(n => new Path(dir, n).toString): _*)
-          .select(col(c), col("_metadata.file_path").as("__mt_file"))
-          .groupBy("__mt_file")
-          .agg(min(col(c)).as("mn"), max(col(c)).as("mx"))
-          .collect()
-          .flatMap { r =>
-            if (r.isNullAt(1) || r.isNullAt(2)) None
-            else {
-              val p = r.getString(0)
-              // key by basename: staged names are UUID-unique, so the
-              // map lookup replaces an O(#files^2) suffix scan
-              Some((p.substring(p.lastIndexOf('/') + 1),
-                if (isStr) StrRange(r.getString(1), r.getString(2))
-                else LongRange(r.getLong(1), r.getLong(2)): Stats))
-            }
-          }
-          .toMap
-        // zero rows or all-NULL stats: no range to track — the empty
-        // range prunes the file from every probe
-        renamed.map(n => Entry(n, stats.getOrElse(n, EmptyRange)))
+        val stats = fileStats(df.sparkSession, dir, renamed, c,
+          df.schema(c).dataType == StringType)
+        renamed.map(n => Entry(n, stats(n)))
     }
   }
 
-  /** Reject NULL and duplicate values of the merge/stats key — the
-    * invariant every tracked table maintains (see KEY DISCIPLINE).
-    * One aggregation pass; the two failure modes get distinct
-    * messages so a NULL-key batch is not misdiagnosed as duplicates. */
-  private def requireUniqueKeys(df: DataFrame, key: String, what: String): Unit = {
-    val r = df.agg(count(lit(1)), count(col(key)), count_distinct(col(key))).head()
-    val (total, nonNull, distinct) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    require(total == nonNull,
-      s"$what carries ${total - nonNull} NULL '$key' value(s) — NULL merge keys " +
+  /** Per-file [[Stats]] of column `c` for the data files `names` under
+    * `dir`: from each file's parquet footer ([[footerStats]], driver
+    * metadata reads, no Spark job), falling back to ONE scan grouped by
+    * `_metadata.file_path` ([[scanStats]]) for only the files whose
+    * footer cannot answer. */
+  private[graft] def fileStats(spark: SparkSession, dir: Path, names: Seq[String],
+                               c: String, isStr: Boolean): Map[String, Stats] = {
+    val fromFooter = names.map(n =>
+      n -> footerStats(spark, new Path(dir, n), c, isStr)).toMap
+    val unknown = names.filter(fromFooter(_).isEmpty)
+    val scanned =
+      if (unknown.isEmpty) Map.empty[String, Stats]
+      else scanStats(spark, dir, unknown, c, isStr)
+    names.map(n => n -> fromFooter(n).getOrElse(scanned(n))).toMap
+  }
+
+  /** The file's [min, max] of top-level column `c` merged over its row
+    * groups' footer statistics, in the column's parquet order — signed
+    * for INT64, unsigned byte order for UTF-8 strings, i.e. Spark's own
+    * ([[utf8Cmp]]). Zero rows, or all values NULL, is [[EmptyRange]].
+    * None when any non-empty row group lacks a usable min/max: parquet
+    * drops min/max values over 4 KB (NULL counts stay), and a writer
+    * may disable statistics. (A truncated string min/max only widens
+    * the range — a prefix min, an incremented max — so it adds
+    * candidates, never misses one.) */
+  private[graft] def footerStats(spark: SparkSession, file: Path, c: String,
+                                 isStr: Boolean): Option[Stats] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val blocks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+    val chunks = blocks.filter(_.getRowCount > 0).map { b =>
+      b -> b.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(c)))
+        .map(_.getStatistics).orNull
+    }
+    val answered = chunks.forall { case (b, s) =>
+      s != null && (s.hasNonNullValue ||
+        (s.isNumNullsSet && s.getNumNulls == b.getRowCount))
+    }
+    if (!answered) None
+    else chunks.map(_._2).filter(_.hasNonNullValue) match {
+      case Seq() => Some(EmptyRange)
+      case s0 +: rest =>
+        val all = s0.copy()
+        rest.foreach(s => all.mergeStatistics(s))
+        Some(
+          if (isStr) StrRange(
+            all.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
+            all.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8)
+          else LongRange(all.genericGetMin.asInstanceOf[java.lang.Long],
+            all.genericGetMax.asInstanceOf[java.lang.Long]))
+    }
+  }
+
+  /** Per-file [min, max] of `c` by reading the files back: one scan
+    * grouped by `_metadata.file_path`, so data-sized work stays in
+    * executors and only #files stat rows reach the driver. */
+  private[graft] def scanStats(spark: SparkSession, dir: Path, names: Seq[String],
+                               c: String, isStr: Boolean): Map[String, Stats] = {
+    val found = spark.read
+      .parquet(names.map(n => new Path(dir, n).toString): _*)
+      .select(col(c), col("_metadata.file_path").as("__mt_file"))
+      .groupBy("__mt_file")
+      .agg(min(col(c)).as("mn"), max(col(c)).as("mx"))
+      .collect()
+      .flatMap { r =>
+        if (r.isNullAt(1) || r.isNullAt(2)) None
+        else {
+          val p = r.getString(0)
+          // key by basename: staged names are UUID-unique, so the
+          // map lookup replaces an O(#files^2) suffix scan
+          Some((p.substring(p.lastIndexOf('/') + 1),
+            if (isStr) StrRange(r.getString(1), r.getString(2))
+            else LongRange(r.getLong(1), r.getLong(2)): Stats))
+        }
+      }
+      .toMap
+    // zero rows or all-NULL stats: no range to track — the empty
+    // range prunes the file from every probe
+    names.map(n => n -> found.getOrElse(n, EmptyRange)).toMap
+  }
+
+  /** The ONE validation pass over a mutation's keys — the invariant
+    * every tracked table maintains (see KEY DISCIPLINE): `upserts` keys
+    * must be non-NULL and unique, and disjoint from the `deletes` keys
+    * (NULL delete keys match nothing and are ignored). A single global
+    * aggregate answered by `collect()`: no Limit plan, whose generated
+    * class numbers its counter from a JVM-wide sequence and so can
+    * never hit the codegen cache. A `collapsed` batch (an epoch already
+    * reduced to latest-per-key, so unique and disjoint by
+    * construction) skips the per-key grouping that proves those two
+    * and is only checked for NULL upsert keys. Each failure mode has
+    * its own message, so a NULL-key batch is not misdiagnosed as
+    * duplicates. Returns whether the batch touches any non-NULL key —
+    * false is an empty batch. */
+  private def checkKeys(upserts: DataFrame, deletes: Option[DataFrame], key: String,
+                        what: String, collapsed: Boolean = false): Boolean = {
+    val k = col(key)
+    val tagged = (upserts.select(k, lit(1L).as("__mt_nu"), lit(0L).as("__mt_nd")) +:
+      deletes.toSeq.map(_.select(k, lit(0L).as("__mt_nu"), lit(1L).as("__mt_nd"))))
+      .reduce(_.unionByName(_))
+    val perKey =
+      if (collapsed) tagged
+      else tagged.groupBy(k)
+        .agg(sum("__mt_nu").as("__mt_nu"), sum("__mt_nd").as("__mt_nd"))
+    val (nu, nd, live) = (col("__mt_nu"), col("__mt_nd"), k.isNotNull)
+    val proofs =
+      if (collapsed) Nil
+      else Seq(count_if(live && nu > 1), count_if(live && nu > 0 && nd > 0))
+    val r = perKey.agg(coalesce(sum(when(k.isNull, nu)), lit(0L)),
+      count_if(live) +: proofs: _*).collect()(0)
+    require(r.getLong(0) == 0,
+      s"$what carries ${r.getLong(0)} NULL '$key' value(s) — NULL merge keys " +
         "cannot match range pruning or the key join and are not supported")
-    require(nonNull == distinct,
-      s"$what carries duplicate '$key' values — ambiguous merge")
+    if (!collapsed) {
+      require(r.getLong(2) == 0,
+        s"$what carries duplicate '$key' values — ambiguous merge")
+      require(r.getLong(3) == 0,
+        "a key appears as BOTH upsert and delete in one epoch — collapse the " +
+          "batch to latest-per-key first (apply order would be ambiguous)")
+    }
+    r.getLong(1) > 0
   }
 
   /** Create a table at `path` from `df` as version 0. Pass the merge
@@ -434,9 +536,9 @@ object MergeTable {
     require(versions(fs, dir).isEmpty, s"$path already holds a MergeTable")
     statsCol.foreach { c =>
       val t = df.schema(c).dataType
-      require(t == LongType || t == org.apache.spark.sql.types.StringType,
+      require(t == LongType || t == StringType,
         s"stats column '$c' must be LONG or STRING, got $t")
-      requireUniqueKeys(df, c, "initial data")
+      checkKeys(df, None, c, "initial data")
     }
     publish(fs, dir, 0, Manifest(df.schema.toDDL, statsCol,
       stage(df, dir, fs, statsCol)))
@@ -633,7 +735,7 @@ object MergeTable {
     val outSchema =
       if (withFileCol)
         schema.add(StructField("__mt_file",
-          org.apache.spark.sql.types.StringType, nullable = false))
+          StringType, nullable = false))
       else schema
     if (entries.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
@@ -844,18 +946,6 @@ object MergeTable {
     }
 
 
-  /** MERGE (upsert) by `key`: rows of `updates` replace same-key base
-    * rows, new keys append. Copy-on-write with FILE PRUNING: only
-    * candidate files (range-overlap when the key is the tracked
-    * stats column — found WITHOUT scanning the base) are rewritten
-    * (their unmatched survivors + every update row land in fresh
-    * files); all other files carry into the new manifest untouched.
-    * Returns the new version. `updates` must carry unique, non-NULL
-    * keys — an ambiguous double-update is rejected, not resolved
-    * silently. `updates` may carry NEW columns (schema evolution —
-    * the manifest widens, pre-evolution files null-fill on read) but
-    * never fewer than the table's. A lost publish race retries from
-    * the new latest (bounded). */
   /** Schema evolution contract shared by [[merge]] and [[applyBatch]]:
     * updates may ADD columns (the manifest DDL widens; pre-evolution
     * files null-fill at read), never drop or retype existing ones —
@@ -877,35 +967,102 @@ object MergeTable {
       StructField(c, updates.schema(c).dataType, nullable = true)))
   }
 
+  /** The upserts' size in bytes when their plan can state it: leaves
+    * whose size is measured (a loaded cache, a file scan, local rows, a
+    * range) under projections, filters and unions only, none of which
+    * multiplies rows. None otherwise — without CBO a join's or an
+    * aggregate's estimate is a guess (an inner join's is the product of
+    * its sides). */
+  private def measuredBytes(df: DataFrame): Option[BigInt] = {
+    def measured(p: LogicalPlan): Boolean = p match {
+      case _: Project | _: Filter | _: Union => p.children.forall(measured)
+      case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
+      case _: LogicalRelation | _: LocalRelation | _: Range => true
+      case _ => false
+    }
+    val plan = df.queryExecution.optimizedPlan
+    if (measured(plan)) Some(plan.stats.sizeInBytes) else None
+  }
+
+  /** Lay out a tracked table's rewrite: one that fits in
+    * [[SmallFileBytes]] lands as ONE file, through a single-partition
+    * exchange (no sampling job). A steady epoch's hot range then stays
+    * in one file, and the next epoch on the same keys hits that file
+    * alone, not every file a parallel write spread them over. Bytes are
+    * the hit files' lengths plus the upserts' [[measuredBytes]]. Larger
+    * rewrites keep the write's own parallel partitioning — a range
+    * shuffle there costs a sampling pass and a second shuffle of every
+    * rewritten row — as do untracked tables and upserts whose size is
+    * only a guess: a guess must not decide that one task writes it
+    * all. */
+  private def layout(rows: DataFrame, ups: DataFrame, hits: Seq[Entry],
+                     dir: Path, fs: FileSystem,
+                     statsCol: Option[String]): DataFrame = {
+    def small = measuredBytes(ups).exists(upBytes => upBytes +
+      hits.map(e => fs.getFileStatus(new Path(dir, e.name)).getLen).sum <= SmallFileBytes)
+    if (statsCol.isDefined && small) rows.repartition(1) else rows
+  }
+
+  /** The copy-on-write body [[merge]] and [[applyBatch]] share, run
+    * under the OCC retry: candidate files (range-overlap when the key is
+    * the tracked stats column — found WITHOUT scanning the base) of
+    * the upsert keys plus the non-NULL `deletes` keys rewrite as their
+    * unmatched survivors + every upsert row, laid out by [[layout]];
+    * all other files carry into the new manifest untouched. `empty`
+    * (no key touched) commits nothing and returns the current
+    * version. */
+  private def commitUpserts(spark: SparkSession, path: String, what: String,
+                            upserts: DataFrame, deletes: Option[DataFrame],
+                            key: String, empty: Boolean = false): Int =
+    withOccRetry(s"$what into $path") {
+      val dir = new Path(path)
+      val fs = fsFor(spark, dir)
+      val v = versions(fs, dir).last
+      val m = readManifest(fs, dir, v)
+      val newSchema = evolvedSchema(StructType.fromDDL(m.ddl), upserts)
+      if (empty) v
+      else {
+        val ups = upserts.select(newSchema.fieldNames.map(col).toIndexedSeq: _*)
+        val touched = (ups.select(col(key)) +: deletes.toSeq).reduce(_.unionByName(_))
+        val hits = candidateFiles(spark, dir, m, touched, key)
+        val hitNames = hits.map(_.name).toSet
+        val survivors =
+          if (hits.isEmpty) ups // pure append
+          else fromEntries(spark, dir, newSchema, hits, m.statsCol)
+            .join(touched, Seq(key), "left_anti")
+            .select(newSchema.fieldNames.map(col).toIndexedSeq: _*)
+            .unionByName(ups)
+        val rewritten = stage(layout(survivors, ups, hits, dir, fs, m.statsCol),
+          dir, fs, m.statsCol)
+        fireMidCommitHook()
+        publish(fs, dir, v + 1,
+          Manifest(newSchema.toDDL, m.statsCol,
+            m.entries.filterNot(e => hitNames(e.name)) ++ rewritten))
+        v + 1
+      }
+    }
+
+  /** MERGE (upsert) by `key`: rows of `updates` replace same-key base
+    * rows, new keys append. Copy-on-write with FILE PRUNING: only
+    * candidate files (range-overlap when the key is the tracked
+    * stats column — found WITHOUT scanning the base) are rewritten
+    * (their unmatched survivors + every update row land in fresh
+    * files — one file for a small rewrite of a tracked table, see
+    * [[layout]]); all other files carry into the new manifest
+    * untouched.
+    * Returns the new version. `updates` must carry unique, non-NULL
+    * keys — an ambiguous double-update is rejected, not resolved
+    * silently. `updates` may carry NEW columns (schema evolution —
+    * the manifest widens, pre-evolution files null-fill on read) but
+    * never fewer than the table's. A lost publish race retries from
+    * the new latest (bounded). */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
             key: String): Int = {
     // key validation depends only on the batch, not the manifest —
     // run it ONCE, outside the OCC loop, so a contended merge never
     // re-pays the aggregation pass per retry
-    requireUniqueKeys(updates, key, "updates")
-    withOccRetry(s"merge into $path") {
-    val dir = new Path(path)
-    val fs = fsFor(spark, dir)
-    val v = versions(fs, dir).last
-    val m = readManifest(fs, dir, v)
-    val newSchema = evolvedSchema(StructType.fromDDL(m.ddl), updates)
-    val ups = updates.select(newSchema.fieldNames.map(col).toIndexedSeq: _*)
-
-    val hits = candidateFiles(spark, dir, m, ups, key)
-    val hitNames = hits.map(_.name).toSet
-    val survivors =
-      if (hits.isEmpty) ups // pure append
-      else fromEntries(spark, dir, newSchema, hits, m.statsCol)
-        .join(ups.select(col(key)), Seq(key), "left_anti")
-        .select(newSchema.fieldNames.map(col).toIndexedSeq: _*)
-        .unionByName(ups)
-    val rewritten = stage(survivors, dir, fs, m.statsCol)
-    fireMidCommitHook()
-    publish(fs, dir, v + 1,
-      Manifest(newSchema.toDDL, m.statsCol,
-        m.entries.filterNot(e => hitNames(e.name)) ++ rewritten))
-    v + 1
-    }
+    checkKeys(updates, None, key, "updates")
+    commitUpserts(spark, path, "merge", updates, None, key)
   }
 
   /** ONE-COMMIT EPOCH APPLY: upserts and deletes of one CDC epoch
@@ -919,40 +1076,32 @@ object MergeTable {
     * may be empty; an entirely empty epoch commits nothing and
     * returns the current version. Upserts may evolve the schema
     * exactly as [[merge]] does. Retries a lost publish race from the
-    * new latest. Returns the version the epoch landed as. */
+    * new latest. Returns the version the epoch landed as.
+    *
+    * Spark actions per epoch on a tracked table: ONE validation
+    * aggregate (NULL and duplicate upsert keys, upsert/delete overlap
+    * and emptiness together — [[checkKeys]]), the candidate probe's
+    * collect, and the staging write ([[layout]]: one file for a small
+    * rewrite); file stats come from the written footers ([[stage]]).
+    * An empty epoch stops after the first. */
   def applyBatch(spark: SparkSession, path: String, upserts: DataFrame,
-                 deletes: DataFrame, key: String): Int = {
-    requireUniqueKeys(upserts, key, "upserts")
-    require(upserts.join(deletes.select(col(key)), Seq(key), "left_semi").isEmpty,
-      "a key appears as BOTH upsert and delete in one epoch — collapse the " +
-        "batch to latest-per-key first (apply order would be ambiguous)")
-    withOccRetry(s"applyBatch into $path") {
-      val dir = new Path(path)
-      val fs = fsFor(spark, dir)
-      val v = versions(fs, dir).last
-      val m = readManifest(fs, dir, v)
-      val newSchema = evolvedSchema(StructType.fromDDL(m.ddl), upserts)
-      val ups = upserts.select(newSchema.fieldNames.map(col).toIndexedSeq: _*)
-      val dels = deletes.select(col(key)).na.drop().distinct()
-      val touched = ups.select(col(key)).unionByName(dels)
-      if (touched.isEmpty) v
-      else {
-        val hits = candidateFiles(spark, dir, m, touched, key)
-        val hitNames = hits.map(_.name).toSet
-        val survivors =
-          if (hits.isEmpty) ups // pure append
-          else fromEntries(spark, dir, newSchema, hits, m.statsCol)
-            .join(touched, Seq(key), "left_anti")
-            .select(newSchema.fieldNames.map(col).toIndexedSeq: _*)
-            .unionByName(ups)
-        val rewritten = stage(survivors, dir, fs, m.statsCol)
-        fireMidCommitHook()
-        publish(fs, dir, v + 1,
-          Manifest(newSchema.toDDL, m.statsCol,
-            m.entries.filterNot(e => hitNames(e.name)) ++ rewritten))
-        v + 1
-      }
-    }
+                 deletes: DataFrame, key: String): Int =
+    applyEpoch(spark, path, upserts, deletes, key, collapsed = false)
+
+  /** [[applyBatch]], or with `collapsed` the form for an epoch already
+    * reduced to latest-per-key (the `mergeApplySink` shape), whose keys
+    * are unique and whose upserts and deletes are disjoint by
+    * construction: its validation aggregate skips proving those two
+    * and still rejects NULL upsert keys, and an empty epoch still
+    * commits nothing. */
+  private[graft] def applyEpoch(spark: SparkSession, path: String,
+                                upserts: DataFrame, deletes: DataFrame,
+                                key: String, collapsed: Boolean): Int = {
+    val dels0 = deletes.select(col(key)).na.drop()
+    val dels = if (collapsed) dels0 else dels0.distinct()
+    val nonEmpty = checkKeys(upserts, Some(dels), key, "upserts", collapsed)
+    commitUpserts(spark, path, "applyBatch", upserts, Some(dels), key,
+      empty = !nonEmpty)
   }
 
   /** COW DELETE BY KEY SET: like [[deleteWhere]] but the doomed keys
@@ -1363,7 +1512,7 @@ object MergeTable {
     * CDC apply mid-epoch). Returns the new version, or -1 when
     * nothing needed compacting. */
   def optimize(spark: SparkSession, path: String,
-               smallBytes: Long = 16L * 1024 * 1024,
+               smallBytes: Long = SmallFileBytes,
                targetBytes: Long = 128L * 1024 * 1024): Int =
     withOccRetry(s"optimize $path") {
       val dir = new Path(path)

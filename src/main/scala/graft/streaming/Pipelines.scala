@@ -1204,12 +1204,17 @@ object Pipelines {
     * ONE COMMIT PER EPOCH: the collapsed batch PERSISTS for the
     * epoch's duration (it feeds the upsert/delete splits and the
     * apply — without the cache each would re-run the groupBy), and
-    * upserts + deletes land through `MergeTable.applyBatch` as a
-    * SINGLE manifest version: one candidate probe, one staging pass,
-    * half the version churn feeding the compaction loop. (The
-    * creating epoch's delete markers match nothing by construction —
-    * the collapse leaves each key either upsert or delete, and the
-    * table holds only the epoch's own upserts.) */
+    * upserts + deletes land through `MergeTable.applyBatch`'s
+    * collapsed form as a SINGLE manifest version, in three Spark
+    * actions: one validation aggregate (which also fills the cache;
+    * the collapse already makes keys unique and the two sides
+    * disjoint, so only NULL keys and emptiness are checked — an empty
+    * epoch stops here and publishes nothing), one candidate probe and
+    * one staging write (a single file while the rewrite is small)
+    * whose file stats come from the written footers. (The creating epoch's delete markers match
+    * nothing by construction — the collapse leaves each key either
+    * upsert or delete, and the table holds only the epoch's own
+    * upserts.) */
   def mergeApplySink(path: String, keyCol: String, tsCol: String,
                      opCol: String = "op",
                      deleteOp: String = "D"): (DataFrame, Long) => Unit =
@@ -1233,7 +1238,7 @@ object Pipelines {
         if (MergeTable.latestVersion(spark, path) < 0)
           MergeTable.create(ups, path, statsCol = stats)
         else
-          MergeTable.applyBatch(spark, path, ups, dels, keyCol)
+          MergeTable.applyEpoch(spark, path, ups, dels, keyCol, collapsed = true)
       } finally latest.unpersist()
     }
 

@@ -1139,4 +1139,196 @@ class MergeTableSpec extends AnyFunSuite {
       s"partial-group lineage over-claim: $feed vs ${derive(snap(2), snap(4))}")
     assert(feed == Set(("update_preimage", 1L), ("update_postimage", 1L)))
   }
+
+  /** The data files Spark wrote under `dir`, by basename. */
+  private def partFiles(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq.sorted
+
+  /** Footer ranges of every part under `dir` next to their scan truth. */
+  private def footerVsScan(dir: String, c: String, isStr: Boolean)
+      : (Map[String, Option[MergeTable.Stats]], Map[String, MergeTable.Stats]) = {
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val names = partFiles(dir)
+    (names.map(n => n -> MergeTable.footerStats(spark,
+      new org.apache.hadoop.fs.Path(d, n), c, isStr)).toMap,
+      MergeTable.scanStats(spark, d, names, c, isStr))
+  }
+
+  test("footer stats equal the scan-derived ranges: LONG parts, all-NULL and zero-row parts") {
+    import spark.implicits._
+    val dir = tmpDir() + "/parts"
+    // four ranged parts (negatives included), one in several row groups
+    (-2000L until 2000L).map(k => (k, s"v$k")).toDF("id", "v")
+      .repartitionByRange(4, col("id"))
+      .write.option("parquet.block.size", "4096").parquet(dir)
+    // one all-NULL part and one zero-row part
+    Seq((Option.empty[Long], "n1"), (Option.empty[Long], "n2")).toDF("id", "v")
+      .coalesce(1).write.mode("append").parquet(dir)
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING"))
+      .write.mode("append").parquet(dir)
+    val names = partFiles(dir)
+    assert(names.size == 6, s"expected 4 ranged + all-NULL + zero-row parts: $names")
+    val rowGroups = names.map { n =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(dir, n), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.size finally r.close()
+    }
+    assert(rowGroups.max > 1, s"need a part spanning several row groups: $rowGroups")
+    assert(rowGroups.contains(0), s"need a zero-row part: $rowGroups")
+    val (footer, scan) = footerVsScan(dir, "id", isStr = false)
+    assert(footer.values.forall(_.isDefined), s"every footer must answer: $footer")
+    assert(footer.map { case (n, s) => n -> s.get } == scan)
+    assert(scan.values.count(_ == MergeTable.EmptyRange) == 2,
+      s"the all-NULL and zero-row parts range over nothing: $scan")
+    assert(scan.values.collect { case MergeTable.LongRange(a, b) => (a, b) }
+      .toSeq.sorted.head._1 == -2000L)
+  }
+
+  test("footer stats on STRING keys follow Spark's UTF-8 byte order; a >4 KB key falls back to the scan") {
+    import spark.implicits._
+    val dir = tmpDir() + "/parts"
+    // U+FFFF sorts BELOW the supplementary-plane U+1F600 in UTF-8 bytes
+    // (EF BF BF < F0 9F 98 80) but ABOVE it in UTF-16 code units
+    val keys = Seq("A", "z", "\u00e9t\u00e9", "\u4e2d\u6587", "\uffff",
+      "\ud83d\ude00", "\ud83d\ude00x")
+    keys.toDF("recid").withColumn("v", lit(1)).coalesce(1).write.parquet(dir)
+    Seq("AC0001", "FT0002").toDF("recid").withColumn("v", lit(2))
+      .coalesce(1).write.mode("append").parquet(dir)
+    val (footer, scan) = footerVsScan(dir, "recid", isStr = true)
+    assert(footer.values.forall(_.isDefined), s"every footer must answer: $footer")
+    assert(footer.map { case (n, s) => n -> s.get } == scan)
+    assert(scan.values.toSet.contains(
+      MergeTable.StrRange("A", "\ud83d\ude00x")),
+      s"max must be the supplementary-plane key: $scan")
+    // parquet drops min/max over 4 KB (NULL counts stay): the footer
+    // cannot answer, and fileStats scans exactly that part
+    val big = "K" * 5000
+    Seq(big, "B").toDF("recid").withColumn("v", lit(3))
+      .coalesce(1).write.mode("append").parquet(dir)
+    val (footer2, scan2) = footerVsScan(dir, "recid", isStr = true)
+    assert(footer2.values.count(_.isEmpty) == 1,
+      s"only the >4 KB part lacks footer stats: $footer2")
+    assert(scan2.values.toSet.contains(MergeTable.StrRange("B", big)))
+    val names = partFiles(dir)
+    assert(MergeTable.fileStats(spark, new org.apache.hadoop.fs.Path(dir), names,
+      "recid", isStr = true) == scan2)
+  }
+
+  /** (name, min, max) of every live entry of a LONG-tracked table. */
+  private def longRanges(path: String): Seq[(String, Long, Long)] = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v = MergeTable.latestVersion(spark, path)
+    val in = fs.open(new org.apache.hadoop.fs.Path(path, f"manifest-$v%010d.txt"))
+    val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
+    txt.split("\n").drop(2).filter(_.nonEmpty)
+      .map { l => val p = l.split("\t"); (p(0), p(1).toLong, p(2).toLong) }.toSeq
+  }
+
+  test("a small rewrite lands as one file: live ranges stay disjoint; the next epoch rewrites only the overlapping file") {
+    import spark.implicits._
+    val path = tmpDir()
+    // 40 keys spaced 10 apart in 4 range files: [0, 90], [100, 190], ...
+    MergeTable.create((0L until 40L).map(k => (k * 10, s"v$k")).toDF("id", "payload")
+      .repartitionByRange(4, col("id")), path, statsCol = Some("id"))
+    def disjoint(): Unit = {
+      val rs = longRanges(path).sortBy(_._2)
+      rs.sliding(2).foreach { w =>
+        assert(w(0)._3 < w(1)._2, s"live ranges must be pairwise disjoint: $rs")
+      }
+    }
+    disjoint()
+    // two epochs on one narrow key range: update, insert-in-range, delete
+    val epochs = Seq(
+      (Seq((120L, "u120"), (125L, "i125")), Seq(130L)),
+      (Seq((125L, "u125"), (140L, "u140")), Seq(150L)))
+    epochs.foreach { case (ups, dels) =>
+      val before = longRanges(path)
+      val overlapping = before.filter(r => r._2 <= 150L && r._3 >= 120L).map(_._1).toSet
+      assert(overlapping.size == 1, s"the narrow range lives in one file: $before")
+      MergeTable.applyBatch(spark, path, ups.toDF("id", "payload"), dels.toDF("id"), "id")
+      val after = longRanges(path).map(_._1).toSet
+      val rewritten = before.map(_._1).toSet -- after
+      assert(rewritten == overlapping,
+        s"only the overlapping file may rewrite: $rewritten vs $overlapping")
+      assert((after -- before.map(_._1)).size == 1, s"one file written: $after")
+      disjoint()
+    }
+    val now = MergeTable.read(spark, path).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(now.size == 39 && now(120L) == "u120" && now(125L) == "u125" &&
+      now(140L) == "u140" && !now.contains(130L) && !now.contains(150L))
+  }
+
+  test("updates from an uncached join keep the write's own layout: a guessed size never sets the file count") {
+    import spark.implicits._
+    val path = tmpDir()
+    MergeTable.create((0L until 1000L).map(k => (k, s"v$k")).toDF("id", "payload")
+      .coalesce(1), path, statsCol = Some("id"))
+    // five updates from a join: without CBO its size estimate is the
+    // product of its sides (GBs here), nothing like the five rows it
+    // returns (ranges, not local rows, which the optimizer would fold)
+    val ups = spark.range(20000L).filter(col("id").between(10L, 14L))
+      .join(spark.range(1000L).select(col("id"),
+        concat(lit("u"), col("id").cast("string")).as("payload")), "id")
+    val before = longRanges(path).map(_._1).toSet
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try MergeTable.merge(spark, path, ups, "id")
+    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val written = longRanges(path).map(_._1).toSet -- before
+    assert(written.size <= 6,
+      s"5 update rows + 995 survivors of one file wrote ${written.size} files")
+    val now = MergeTable.read(spark, path).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(now.size == 1000 && now(12L) == "u12" && now(15L) == "v15")
+  }
+
+  test("mergeApplySink: NULL RECIDs rejected, empty epochs publish nothing, a steady epoch runs few jobs") {
+    import spark.implicits._
+    val path = tmpDir() + "/table"
+    val sink = graft.streaming.Pipelines.mergeApplySink(path, "recid", "ts")
+    def epoch(rows: Seq[(Option[String], Long, String, String)]) =
+      rows.toDF("recid", "ts", "op", "payload")
+    sink(epoch((0 until 200).map(i => (Some(f"R$i%04d"), 1L, "U", s"p$i"))), 0L)
+    def steady(id: Long) = epoch((0 until 30).map(i =>
+      (Some(f"R${i * 3}%04d"), id + 1, if (i % 10 == 0) "D" else "U", s"e$id-$i")))
+    sink(steady(1L), 1L)
+    val v = MergeTable.latestVersion(spark, path)
+    // a NULL key is rejected with its own message and commits nothing
+    val ex = intercept[IllegalArgumentException] {
+      sink(epoch(Seq((None, 9L, "U", "x"), (Some("R0001"), 9L, "U", "y"))), 2L)
+    }
+    assert(ex.getMessage.contains("NULL"), s"got: ${ex.getMessage}")
+    assert(MergeTable.latestVersion(spark, path) == v)
+    // an empty epoch publishes no version
+    sink(epoch(Nil), 3L)
+    assert(MergeTable.latestVersion(spark, path) == v)
+    // one steady epoch's Spark jobs, counted under its own job group:
+    // validation, candidate probe and staging write (each shuffle
+    // stage is its own job under AQE). The path that proved uniqueness
+    // and disjointness with Limit-planned isEmpty/head actions and read
+    // its staged files back for their stats ran 16 here.
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "mt-steady"))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("mt-steady", "one steady sink epoch")
+      try sink(steady(4L), 4L) finally sc.clearJobGroup()
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(MergeTable.latestVersion(spark, path) == v + 1)
+    assert(jobs.get() > 0 && jobs.get() < 16, s"${jobs.get()} jobs in one steady epoch")
+    val now = MergeTable.read(spark, path).collect()
+      .map(r => r.getAs[String]("recid") -> r.getAs[String]("payload")).toMap
+    assert(now.size == 197 && now("R0003") == "e4-1" && !now.contains("R0030"))
+  }
 }
