@@ -18,24 +18,27 @@ object BenchProfile {
                                     shRead: Long, shWrite: Long, input: Long)
 
   private final class ProfListener extends SparkListener {
-    val jobs = mutable.ArrayBuffer.empty[(Int, Long, Int)] // id, wallMs, nStages
+    val jobs = mutable.ArrayBuffer.empty[(Int, Long)] // id, wallMs
     val stages = mutable.ArrayBuffer.empty[StageRow]
     private val jobStart = mutable.Map.empty[Int, Long]
-    private val stageTaskMs = mutable.Map.empty[Int, Long]
-    private val stageGcMs = mutable.Map.empty[Int, Long]
-    private val stageShRead = mutable.Map.empty[Int, Long]
-    private val stageShWrite = mutable.Map.empty[Int, Long]
-    private val stageInput = mutable.Map.empty[Int, Long]
+    // per stage ATTEMPT: a retried attempt reports its own tasks and
+    // its own completion, so keying by stageId alone would add the
+    // failed attempt's metrics into the retry's row
+    private val stageTaskMs = mutable.Map.empty[(Int, Int), Long]
+    private val stageGcMs = mutable.Map.empty[(Int, Int), Long]
+    private val stageShRead = mutable.Map.empty[(Int, Int), Long]
+    private val stageShWrite = mutable.Map.empty[(Int, Int), Long]
+    private val stageInput = mutable.Map.empty[(Int, Int), Long]
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
       jobStart(e.jobId) = e.time
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       jobStart.remove(e.jobId).foreach(t0 =>
-        jobs += ((e.jobId, e.time - t0, 0)))
+        jobs += ((e.jobId, e.time - t0)))
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
       if (m != null) {
-        val sid = e.stageId
+        val sid = (e.stageId, e.stageAttemptId)
         stageTaskMs(sid) = stageTaskMs.getOrElse(sid, 0L) + m.executorRunTime
         stageGcMs(sid) = stageGcMs.getOrElse(sid, 0L) + m.jvmGCTime
         stageShRead(sid) = stageShRead.getOrElse(sid, 0L) +
@@ -47,14 +50,15 @@ object BenchProfile {
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val si = e.stageInfo
+      val sid = (si.stageId, si.attemptNumber())
       val wall = (for {t0 <- si.submissionTime; t1 <- si.completionTime}
         yield t1 - t0).getOrElse(-1L)
       stages += StageRow(si.stageId, si.name.takeWhile(_ != '\n'), si.numTasks,
-        wall, stageTaskMs.getOrElse(si.stageId, 0L),
-        stageGcMs.getOrElse(si.stageId, 0L),
-        stageShRead.getOrElse(si.stageId, 0L),
-        stageShWrite.getOrElse(si.stageId, 0L),
-        stageInput.getOrElse(si.stageId, 0L))
+        wall, stageTaskMs.getOrElse(sid, 0L),
+        stageGcMs.getOrElse(sid, 0L),
+        stageShRead.getOrElse(sid, 0L),
+        stageShWrite.getOrElse(sid, 0L),
+        stageInput.getOrElse(sid, 0L))
     }
     def reset(): Unit = { jobs.clear(); stages.clear() }
   }

@@ -10,15 +10,23 @@ import graft.sources.MergeTable
 /** A MAINTAINED AGGREGATE VIEW over a [[MergeTable]] — the q77 IVM
   * rule packaged as a stateful operator, closing the CDC loop the §2d
   * pipelines open: `mergeApplySink` lands change records in the table,
-  * [[maintain]] advances a downstream grouped aggregate by applying
-  * ONLY the change feed since the last maintained upstream version
-  * (signed delta rule: insert/update_postimage credit, delete/
-  * update_preimage debit; a group-key flip debits the old group and
-  * credits the new; zero-count groups drop). Because the feed is
-  * manifest-aware (incl. across `optimize` via rewrite lineage), one
-  * maintenance step costs the files the epochs TOUCHED, never a
-  * recompute over the table — the posture that keeps a 100 TB table's
-  * rollups fresh for the cost of the day's changes.
+  * [[maintain]] advances a downstream grouped aggregate by folding in
+  * ONLY what changed since the last maintained upstream version.
+  *
+  * ONE DELTA RULE (signed rows): the delta over a version span is the
+  * rows of the files `MergeTable.diffEntries` cannot prove identical,
+  * each signed -1 when visible at the old version and +1 when visible
+  * at the new one; the next state is ONE `groupBy` over (prior state
+  * rows ∪ signed rows) summing `n_rows` and every sum, and groups left
+  * at `n_rows <= 0` drop. `count` and `sum` are additive, so a row a
+  * rewrite left unchanged cancels, a group-key flip debits the old
+  * group and credits the new, and a NULL group is simply one `groupBy`
+  * group — no key alignment, no join. The seed is the same rule from
+  * nothing: every row of the target snapshot at +1. Because the
+  * changed-file set is manifest-aware (incl. across `optimize` via
+  * rewrite lineage), one maintenance step costs the files the epochs
+  * TOUCHED, never a recompute over the table — the posture that keeps
+  * a 100 TB table's rollups fresh for the cost of the day's changes.
   *
   * AGGREGATE SURFACE — the decomposable core: `count(*)` (always
   * maintained as `n_rows`), any number of `sum` columns, and `avg`
@@ -46,17 +54,21 @@ object IncrementalView {
   private val VDirRe = """v=(\d+)""".r
   private val StateDec = DecimalType(38, 4)
 
-  /** Upstream version the current complete MV state reflects, or -1. */
-  def currentVersion(spark: SparkSession, mvDir: String): Int = {
+  /** The `v=<n>` state dirs under `mvDir` by version, each with
+    * whether its `_DONE` marker (a complete publish) exists. */
+  private def stateDirs(spark: SparkSession, mvDir: String): Seq[(Int, Path, Boolean)] = {
     val dir = new Path(mvDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(new Path(dir, "v=*")))
-      .getOrElse(Array.empty).toSeq
+    Option(fs.globStatus(new Path(dir, "v=*"))).getOrElse(Array.empty).toSeq
       .flatMap(st => st.getPath.getName match {
-        case VDirRe(n) if fs.exists(new Path(st.getPath, "_DONE")) => Some(n.toInt)
+        case VDirRe(n) => Some((n.toInt, st.getPath, fs.exists(new Path(st.getPath, "_DONE"))))
         case _ => None
-      }).sorted.lastOption.getOrElse(-1)
+      }).sortBy(_._1)
   }
+
+  /** Upstream version the current complete MV state reflects, or -1. */
+  def currentVersion(spark: SparkSession, mvDir: String): Int =
+    stateDirs(spark, mvDir).filter(_._3).lastOption.fold(-1)(_._1)
 
   /** The maintained state as stored: (groupCol, n_rows, one
     * DECIMAL(38,4) column per maintained sum) as of the current
@@ -96,34 +108,75 @@ object IncrementalView {
             "(count(*) is always maintained as n_rows)")
     }
 
-  /** Distinct source columns whose running DECIMAL(38,4) sums the
-    * requested aggs need in state (avg rides its sum + n_rows). */
-  private def sumCols(aggs: Seq[(String, String)]): Seq[String] =
-    aggs.map(_._2).distinct
+  /** The (state column, source column) sums the requested aggs need:
+    * one running DECIMAL(38,4) `sum_<c>` per distinct source column
+    * (avg rides its sum + n_rows). */
+  private def stateSums(aggs: Seq[(String, String)]): Seq[(String, String)] =
+    aggs.map(_._2).distinct.map(c => s"sum_$c" -> c)
+
+  /** (applied, target) of one maintenance step: `target` is the
+    * upstream table's latest retained version, or the explicit retained
+    * `toVersion`; `applied` is the view's `watermark`, or -1 (seed from
+    * the full target snapshot) when there is none or it names a
+    * vacuumed version — that one cannot delta-apply, so the view
+    * reseeds instead of wedging the maintenance loop forever. */
+  private def steps(spark: SparkSession, tablePath: String, toVersion: Int,
+                    watermark: Int): (Int, Int) = {
+    val retained = MergeTable.retainedVersions(spark, tablePath)
+    require(retained.nonEmpty, s"no MergeTable at $tablePath")
+    require(toVersion < 0 || retained.contains(toVersion),
+      s"version $toVersion not retained (have ${retained.mkString(",")})")
+    (if (retained.contains(watermark)) watermark else -1,
+      if (toVersion < 0) retained.last else toVersion)
+  }
+
+  /** The signed rows of the upstream span (applied, target] in state
+    * shape — (groupCol, n_rows = ±1, one ±value per sum) — or, with
+    * no watermark (`applied` < 0), every row of the target snapshot at
+    * +1. Negation, not multiplication, keeps the sums at the state
+    * precision. */
+  private def delta(spark: SparkSession, tablePath: String, applied: Int,
+                    target: Int, groupCol: String,
+                    sums: Seq[(String, String)]): DataFrame = {
+    val rows =
+      if (applied < 0) MergeTable.read(spark, tablePath, target).withColumn("__sgn", lit(1L))
+      else MergeTable.signedRows(spark, tablePath, applied, target)
+    rows.select(col(groupCol) +: col("__sgn").as("n_rows") +: sums.map { case (n, c) =>
+      val v = col(c).cast(StateDec)
+      when(col("__sgn") > 0L, v).otherwise(-v).as(n)
+    }: _*)
+  }
+
+  /** THE maintenance rule: one `groupBy` over state-shaped rows (prior
+    * state ∪ signed rows) summing `n_rows` and every sum. */
+  private def fold(rows: DataFrame, groupCol: String,
+                   sums: Seq[(String, String)]): DataFrame =
+    rows.groupBy(groupCol).agg(sum(col("n_rows")).as("n_rows"),
+      sums.map { case (n, _) => sum(col(n)).as(n) }: _*)
 
   /** Legacy single-sum surface (state column named `sum_val`): kept
-    * for the §2d sinks; [[maintainAggs]] is the general form. */
+    * for the §2d sinks; [[maintainAggs]] is the general form. `key` is
+    * unused — the signed-rows delta needs no key alignment — and kept
+    * for positional callers. */
   def maintain(spark: SparkSession, tablePath: String, mvDir: String,
                key: String, groupCol: String, sumCol: String): Int =
-    maintainNamed(spark, tablePath, mvDir, key, groupCol,
-      Seq("sum_val" -> sumCol), -1)
+    maintainNamed(spark, tablePath, mvDir, groupCol, Seq("sum_val" -> sumCol), -1)
 
   /** Advance the MV to the upstream table's latest retained version
     * (or an explicit retained `toVersion` — bounded catch-up). First
     * call seeds from the full target snapshot (the one unavoidable
-    * full pass); every later call applies only
-    * `MergeTable.changes(applied, target)`. `aggs` are (op, column)
+    * full pass); every later call folds in only the signed rows of the
+    * files changed since the applied version. `aggs` are (op, column)
     * pairs, op ∈ sum | avg — see the aggregate-surface contract
-    * above. Returns the upstream version the MV now reflects (no-op
-    * when already current). Single-maintainer, like the table-format
-    * maintenance ops. */
+    * above. `key` is unused (see [[maintain]]). Returns the upstream
+    * version the MV now reflects (no-op when already current).
+    * Single-maintainer, like the table-format maintenance ops. */
   def maintainAggs(spark: SparkSession, tablePath: String, mvDir: String,
                    key: String, groupCol: String,
                    aggs: Seq[(String, String)],
                    toVersion: Int = -1): Int = {
     validateAggs(aggs)
-    maintainNamed(spark, tablePath, mvDir, key, groupCol,
-      sumCols(aggs).map(c => s"sum_$c" -> c), toVersion)
+    maintainNamed(spark, tablePath, mvDir, groupCol, stateSums(aggs), toVersion)
   }
 
   // ---- MV state AS a MergeTable (snapshot isolation + CDF on the
@@ -143,6 +196,13 @@ object IncrementalView {
   // changes — state and watermark are atomic by construction, so a
   // torn maintain is impossible rather than merely detectable (the
   // `_DONE`-marker dance the parquet-dir variant needs).
+  //
+  // A step runs the same signed-rows rule over only the groups it
+  // moves: the signed rows fold per group first, groups whose count
+  // and sums all net to zero drop (a rewrite that left a group's rows
+  // as they were must not rewrite its rollup row), the prior rows of
+  // the rest come from a point lookup on the MV table, and one more
+  // fold of (prior ∪ moved) gives their next rows.
   //
   // Group keys encode as "N" (NULL group) / "V" + canonical string —
   // non-null and unique per version, as the tracked key requires.
@@ -178,58 +238,41 @@ object IncrementalView {
 
   /** [[maintainAggs]] with the state in a [[MergeTable]] at
     * `mvTablePath` (same aggregate surface and rejection rules; same
-    * seeding, delta and reseed-after-vacuum semantics). Each
-    * maintenance step lands as ONE applyBatch commit: changed groups
-    * upsert, emptied groups delete, untouched groups' files CARRY BY
-    * NAME (the rollup's own COW pruning), and the new watermark
-    * commits atomically with them. Returns the upstream version the
-    * MV now reflects. */
+    * seeding, signed-rows delta and reseed-after-vacuum semantics;
+    * `key` is unused, see [[maintain]]). Each maintenance step lands
+    * as ONE applyBatch commit: groups the step moved upsert, emptied
+    * groups delete, untouched groups' files CARRY BY NAME (the
+    * rollup's own COW pruning), and the new watermark commits
+    * atomically with them. Returns the upstream version the MV now
+    * reflects. */
   def maintainTable(spark: SparkSession, tablePath: String,
                     mvTablePath: String, key: String, groupCol: String,
                     aggs: Seq[(String, String)],
                     toVersion: Int = -1): Int = {
-    import spark.implicits._
     validateAggs(aggs)
-    val sums = sumCols(aggs).map(c => s"sum_$c" -> c)
-    val retained = MergeTable.retainedVersions(spark, tablePath)
-    require(retained.nonEmpty, s"no MergeTable at $tablePath")
-    val target =
-      if (toVersion < 0) retained.last
-      else {
-        require(retained.contains(toVersion),
-          s"version $toVersion not retained (have ${retained.mkString(",")})")
-        toVersion
-      }
+    val sums = stateSums(aggs)
     val exists = MergeTable.latestVersion(spark, mvTablePath) >= 0
-    val watermark = if (exists) appliedVersion(spark, mvTablePath) else -1
-    val applied = if (watermark >= 0 && !retained.contains(watermark)) -1
-                  else watermark
+    val (applied, target) =
+      steps(spark, tablePath, toVersion, appliedVersion(spark, mvTablePath))
     if (applied >= target) return applied
 
-    val stateCols = Seq(col("__g_key"), col(groupCol), col("n_rows")) ++
-      sums.map { case (n, _) => col(n) } :+ col("__w")
-    val groupType =
-      MergeTable.read(spark, tablePath, target).schema(groupCol).dataType
-    def fullState(df: DataFrame): DataFrame =
-      df.groupBy(groupCol)
-        .agg(count(lit(1)).as("n_rows"),
-          sums.map { case (n, c) => sum(col(c).cast(StateDec))
-            .cast(StateDec).as(n) }: _*)
-        .withColumn("__g_key", gKey(groupCol))
-        .withColumn("__w", lit(null).cast("long"))
+    val stateNames = groupCol +: "n_rows" +: sums.map(_._1)
+    def stateRows(folded: DataFrame): DataFrame =
+      folded.select(gKey(groupCol).as("__g_key") +: stateNames.map(col) :+
+        lit(null).cast("long").as("__w"): _*)
+    val signed = delta(spark, tablePath, applied, target, groupCol, sums)
     // the watermark row: committed in the SAME applyBatch as the
     // group changes, so state and watermark can never tear apart
     val sentinel: DataFrame =
       spark.range(1).select(
         lit(WatermarkKey).as("__g_key") +:
-          lit(null).cast(groupType).as(groupCol) +:
+          lit(null).cast(signed.schema(groupCol).dataType).as(groupCol) +:
           lit(0L).as("n_rows") +:
           sums.map { case (n, _) => lit(0).cast(StateDec).as(n) } :+
           lit(target.toLong).as("__w"): _*)
 
     if (applied < 0) {
-      val seed = fullState(MergeTable.read(spark, tablePath, target))
-        .select(stateCols: _*)
+      val seed = stateRows(fold(signed, groupCol, sums))
       val ups = seed.unionByName(sentinel)
       if (!exists)
         MergeTable.create(ups, mvTablePath, statsCol = Some("__g_key"))
@@ -242,125 +285,54 @@ object IncrementalView {
         MergeTable.applyBatch(spark, mvTablePath, ups, dels, "__g_key")
       }
     } else {
-      val sgn = when(
-        col("_change_type").isin("insert", "update_postimage"), 1L)
-        .otherwise(-1L)
-      val d = MergeTable.changes(spark, tablePath, applied, target, key)
-        .withColumn("__sgn", sgn)
-        .groupBy(gKey(groupCol).as("__g_key"), col(groupCol).as("__dg"))
-        .agg(sum(col("__sgn")).as("__d_n"),
-          sums.map { case (n, c) =>
-            val v = col(c).cast(StateDec)
-            sum(when(col("__sgn") === 1L, v).otherwise(-v))
-              .cast(StateDec).as(s"__d_$n")
-          }: _*)
-      // prior rows of ONLY the affected groups: the table's own
+      val moved = fold(signed, groupCol, sums).filter(
+        sums.map { case (n, _) => coalesce(col(n), lit(0)) =!= 0 }
+          .foldLeft(col("n_rows") =!= 0L)(_ || _))
+      // prior rows of ONLY the moved groups: the table's own
       // point-lookup probe — maintenance never scans the rollup
-      val prev = MergeTable.readKeys(spark, mvTablePath,
-        d.select("__g_key"), "__g_key")
-        .select(col("__g_key") +: (("n_rows" +: sums.map(_._1))
-          .map(n => col(n).as(s"__p_$n"))): _*)
-      val joined = d.join(prev, Seq("__g_key"), "left_outer")
-        .select(col("__g_key") +: col("__dg").as(groupCol) +:
-          ((coalesce(col("__p_n_rows"), lit(0L)) + col("__d_n")).as("n_rows") +:
-            sums.map { case (n, _) =>
-              (coalesce(col(s"__p_$n"), lit(0).cast(StateDec)) +
-                coalesce(col(s"__d_$n"), lit(0).cast(StateDec)))
-                .cast(StateDec).as(n)
-            }): _*)
-        .withColumn("__w", lit(null).cast("long"))
-        .persist()
+      val prior = MergeTable.readKeys(spark, mvTablePath,
+        moved.select(gKey(groupCol).as("__g_key")), "__g_key")
+        .select(stateNames.map(col): _*)
+      val next = stateRows(fold(prior.unionByName(moved), groupCol, sums)).persist()
       try {
-        val ups = joined.filter(col("n_rows") > 0L).select(stateCols: _*)
-          .unionByName(sentinel)
-        val dels = joined.filter(col("n_rows") <= 0L).select("__g_key")
+        val ups = next.filter(col("n_rows") > 0L).unionByName(sentinel)
+        val dels = next.filter(col("n_rows") <= 0L).select("__g_key")
         MergeTable.applyBatch(spark, mvTablePath, ups, dels, "__g_key")
-      } finally joined.unpersist()
+      } finally next.unpersist()
     }
     target
   }
 
-  /** The maintenance core over explicit (stateName, srcCol) sums. */
+  /** The parquet-dir maintenance step over explicit (stateName,
+    * srcCol) sums: the next state is the fold of (prior state ∪ signed
+    * rows), groups at `n_rows <= 0` dropped, published as
+    * `v=<target>` + `_DONE`. */
   private def maintainNamed(spark: SparkSession, tablePath: String,
-                            mvDir: String, key: String, groupCol: String,
+                            mvDir: String, groupCol: String,
                             sums: Seq[(String, String)],
                             toVersion: Int): Int = {
-    val retained = MergeTable.retainedVersions(spark, tablePath)
-    require(retained.nonEmpty, s"no MergeTable at $tablePath")
-    val target =
-      if (toVersion < 0) retained.last
-      else {
-        require(retained.contains(toVersion),
-          s"version $toVersion not retained (have ${retained.mkString(",")})")
-        toVersion
-      }
-    // a watermark pointing at a vacuumed version cannot delta-apply —
-    // reseed from the full target snapshot instead of wedging the
-    // maintenance loop forever (the one legitimate reseed after init)
-    val watermark = currentVersion(spark, mvDir)
-    val applied = if (watermark >= 0 && !retained.contains(watermark)) -1
-                  else watermark
-    if (applied >= target) applied
-    else {
-      def grouped(df: DataFrame, nameOf: String => String): DataFrame =
-        df.groupBy(groupCol)
-          .agg(count(lit(1)).as(nameOf("n_rows")),
-            sums.map { case (n, c) => sum(col(c).cast(StateDec))
-              .cast(StateDec).as(nameOf(n)) }: _*)
-      val next =
-        if (applied < 0)
-          grouped(MergeTable.read(spark, tablePath, target), identity)
-        else {
-          val prev = read(spark, mvDir)
-            .select(col(groupCol).as("__g0") +:
-              ("n_rows" +: sums.map(_._1)).map(n => col(n).as(s"__p_$n")): _*)
-          // signed delta rule; negation (not multiplication) keeps
-          // the decimal type at the promoted state precision
-          val sgn = when(
-            col("_change_type").isin("insert", "update_postimage"), 1L)
-            .otherwise(-1L)
-          val d = MergeTable.changes(spark, tablePath, applied, target, key)
-            .withColumn("__sgn", sgn)
-            .groupBy(col(groupCol).as("__g1"))
-            .agg(sum(col("__sgn")).as("__d_n_rows"),
-              sums.map { case (n, c) =>
-                val v = col(c).cast(StateDec)
-                sum(when(col("__sgn") === 1L, v).otherwise(-v))
-                  .cast(StateDec).as(s"__d_$n")
-              }: _*)
-          def applyDelta(n: String, zero: Column): Column =
-            coalesce(col(s"__p_$n"), zero) + coalesce(col(s"__d_$n"), zero)
-          // null-safe group alignment: a NULL group is one group, not
-          // a never-matching pair of rows (plain equi-join would emit
-          // a duplicate NULL-group row per epoch)
-          prev.join(d, col("__g0") <=> col("__g1"), "full_outer")
-            .select(coalesce(col("__g0"), col("__g1")).as(groupCol) +:
-              applyDelta("n_rows", lit(0L)).as("n_rows") +:
-              sums.map { case (n, _) =>
-                applyDelta(n, lit(0).cast(StateDec)).cast(StateDec).as(n)
-              }: _*)
-            .filter(col("n_rows") > 0L)
-        }
-      val out = s"$mvDir/v=$target"
-      next.write.mode("overwrite").parquet(out)
-      val fs = new Path(mvDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.create(new Path(out, "_DONE"), true).close()
-      // retire superseded states, KEEPING the previous complete one:
-      // if this publish later turns out torn (marker lost with the
-      // dir), the survivor is the watermark the redo delta-applies
-      // from — without it a torn latest would force a full reseed
-      val complete = Option(fs.globStatus(new Path(new Path(mvDir), "v=*")))
-        .getOrElse(Array.empty).toSeq
-        .filter(st => fs.exists(new Path(st.getPath, "_DONE")))
-        .flatMap(st => st.getPath.getName match {
-          case VDirRe(n) => Some(n.toInt); case _ => None
-        }).sorted
-      val keep = complete.takeRight(2).map(v => s"v=$v").toSet
-      Option(fs.globStatus(new Path(new Path(mvDir), "v=*")))
-        .getOrElse(Array.empty)
-        .filterNot(st => keep.contains(st.getPath.getName))
-        .foreach(st => fs.delete(st.getPath, true))
-      target
-    }
+    val (applied, target) =
+      steps(spark, tablePath, toVersion, currentVersion(spark, mvDir))
+    if (applied >= target) return applied
+    val signed = delta(spark, tablePath, applied, target, groupCol, sums)
+    // the prior state has the signed rows' schema (both are the
+    // fold's input shape), so reading it needs no schema-inference job
+    val rows =
+      if (applied < 0) signed
+      else spark.read.schema(signed.schema).parquet(s"$mvDir/v=$applied")
+        .unionByName(signed)
+    val out = s"$mvDir/v=$target"
+    fold(rows, groupCol, sums).filter(col("n_rows") > 0L)
+      .write.mode("overwrite").parquet(out)
+    val fs = new Path(mvDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new Path(out, "_DONE"), true).close()
+    // retire superseded states, KEEPING the previous complete one:
+    // if this publish later turns out torn (marker lost with the
+    // dir), the survivor is the watermark the redo delta-applies
+    // from — without it a torn latest would force a full reseed
+    val dirs = stateDirs(spark, mvDir)
+    val keep = dirs.filter(_._3).takeRight(2).map(_._1).toSet
+    dirs.filterNot(d => keep(d._1)).foreach(d => fs.delete(d._2, true))
+    target
   }
 }

@@ -10,9 +10,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Range, Union}
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Union}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -976,9 +974,7 @@ object MergeTable {
   private def measuredBytes(df: DataFrame): Option[BigInt] = {
     def measured(p: LogicalPlan): Boolean = p match {
       case _: Project | _: Filter | _: Union => p.children.forall(measured)
-      case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
-      case _: LogicalRelation | _: LocalRelation | _: Range => true
-      case _ => false
+      case _ => p.children.isEmpty && graft.operators.Spread.measured(p)
     }
     val plan = df.queryExecution.optimizedPlan
     if (measured(plan)) Some(plan.stats.sizeInBytes) else None
@@ -1350,6 +1346,80 @@ object MergeTable {
       au.filterNot(_._2.subsetOf(excluded)).map(_._1))
   }
 
+  /** What a diff of two retained versions must read: the entries
+    * [[diffEntries]] cannot prove identical on both sides, as rows
+    * under the `toV` schema (pre-evolution files null-fill the added
+    * columns). `newDvs` is non-empty exactly when the span changed
+    * NOTHING but deletion vectors — every diffed entry is the same
+    * file on both sides with a strictly grown dv list, the shape of a
+    * deleteKeysMor epoch — and then lists the sidecars the span
+    * added. Such a span's only change is [[newlyDead]]: ONE scan of
+    * the before-visible rows semi-joined to those (broadcast-small)
+    * sidecars, where a diff of both sides would read every dv'd file
+    * twice. Delta status is uniform per dv file (a sidecar attaches to
+    * every file it touches in ONE publish), and dv lists only grow for
+    * a fixed name (any data change retires the name), so the subset
+    * check is exact. */
+  private final case class Span(spark: SparkSession, dir: Path,
+                                mb: Manifest, ma: Manifest,
+                                beforeE: Seq[Entry], afterE: Seq[Entry],
+                                newDvs: Seq[String]) {
+    def schema: StructType = StructType.fromDDL(ma.ddl)
+    def before: DataFrame = fromEntries(spark, dir, schema, beforeE, mb.statsCol)
+    def after: DataFrame = fromEntries(spark, dir, schema, afterE, ma.statsCol)
+    /** The before-visible rows the new sidecars kill (they key on the
+      * tracked stats column, which deletion vectors require). */
+    def newlyDead: DataFrame = {
+      val dv = spark.read.parquet(newDvs.map(n => new Path(dir, n).toString): _*)
+      fromEntries(spark, dir, schema, beforeE, mb.statsCol, withFileCol = true)
+        .join(broadcast(dv),
+          element_at(split(col("__mt_file"), "/"), -1) === col("__dv_file") &&
+            col(mb.statsCol.get) === col("__dv_k"),
+          "left_semi")
+        .drop("__mt_file")
+    }
+  }
+
+  private def span(spark: SparkSession, path: String, fromV: Int, toV: Int): Span = {
+    require(fromV < toV, s"need fromV < toV, got $fromV >= $toV")
+    val dir = new Path(path)
+    val fs = fsFor(spark, dir)
+    val vs = versions(fs, dir)
+    require(vs.contains(fromV) && vs.contains(toV),
+      s"need retained versions, have ${vs.mkString(",")}")
+    val mb = readManifest(fs, dir, fromV)
+    val ma = readManifest(fs, dir, toV)
+    val (beforeE, afterE) = diffEntries(mb, ma)
+    val afterByName = afterE.map(e => e.name -> e).toMap
+    val dvOnly = beforeE.nonEmpty &&
+      beforeE.map(_.name).toSet == afterE.map(_.name).toSet &&
+      beforeE.forall { eb =>
+        afterByName.get(eb.name).exists(ea =>
+          eb.dvs.toSet.subsetOf(ea.dvs.toSet) && eb.dvs.toSet != ea.dvs.toSet)
+      }
+    val newDvs =
+      if (!dvOnly) Nil
+      else beforeE.flatMap(eb => afterByName(eb.name).dvs.filterNot(eb.dvs.toSet)).distinct
+    Span(spark, dir, mb, ma, beforeE, afterE, newDvs)
+  }
+
+  /** SIGNED ROWS of a version span, the delta of any additive
+    * aggregate over the table: every row of the files [[diffEntries]]
+    * cannot prove identical, under the `toV` schema, with `__sgn` = -1
+    * when it is visible at `fromV` and +1 when it is visible at `toV`
+    * (a dv-only span: only its newly-dead rows, at -1). No key
+    * alignment: a row a rewrite left unchanged appears once per side
+    * and cancels in any count or sum, so the delta needs neither a
+    * join nor a key-unique snapshot. Same version checks and file
+    * pruning as [[changes]]. */
+  private[graft] def signedRows(spark: SparkSession, path: String,
+                                fromV: Int, toV: Int): DataFrame = {
+    val sp = span(spark, path, fromV, toV)
+    if (sp.newDvs.nonEmpty) sp.newlyDead.withColumn("__sgn", lit(-1L))
+    else sp.before.withColumn("__sgn", lit(-1L))
+      .unionByName(sp.after.withColumn("__sgn", lit(1L)))
+  }
+
   /** CHANGE DATA FEED between two retained versions — the read-side
     * complement of the CDC apply (`mergeApplySink` writes changes IN,
     * this reads changes OUT, so downstream consumers can follow a
@@ -1381,57 +1451,19 @@ object MergeTable {
     */
   def changes(spark: SparkSession, path: String, fromV: Int, toV: Int,
               key: String): DataFrame = {
-    require(fromV < toV, s"need fromV < toV, got $fromV >= $toV")
-    val dir = new Path(path)
-    val fs = fsFor(spark, dir)
-    val vs = versions(fs, dir)
-    require(vs.contains(fromV) && vs.contains(toV),
-      s"need retained versions, have ${vs.mkString(",")}")
-    val mb = readManifest(fs, dir, fromV)
-    val ma = readManifest(fs, dir, toV)
-    val schema = StructType.fromDDL(ma.ddl)
-    val (beforeE, afterE) = diffEntries(mb, ma)
+    val sp = span(spark, path, fromV, toV)
     val enforcedByLifecycle =
-      mb.statsCol.contains(key) && ma.statsCol.contains(key)
-    // PURE-MOR FAST PATH: when the span changed NOTHING but deletion
-    // vectors (every diffed entry is the same file on both sides with
-    // a strictly grown dv list — the shape of a deleteKeysMor epoch,
-    // which a CDC follower walks one version at a time), the feed is
-    // exactly the newly-dead keys' rows. The general full-outer diff
-    // would shuffle every dv'd file's rows TWICE; here ONE scan of
-    // the before-visible rows semi-joins the (broadcast-small) delta
-    // dv sidecars — no shuffle at all. Sound only in the pure shape:
-    // any rewrite/append in the span could re-insert a deleted key,
-    // which the key-aligned diff must classify as an update, so mixed
-    // spans fall through to the general path. Delta status is uniform
-    // per dv file (a sidecar attaches to every file it touches in ONE
-    // publish), and dv lists only grow for a fixed name (any data
-    // change retires the name), so the subset check is exact.
-    val afterByName = afterE.map(e => e.name -> e).toMap
-    val pureMor = enforcedByLifecycle && beforeE.nonEmpty &&
-      beforeE.map(_.name).toSet == afterE.map(_.name).toSet &&
-      beforeE.forall { eb =>
-        afterByName.get(eb.name).exists(ea =>
-          eb.dvs.toSet.subsetOf(ea.dvs.toSet) && eb.dvs.toSet != ea.dvs.toSet)
-      }
-    if (pureMor) {
-      val deltaDvs = beforeE.flatMap { eb =>
-        afterByName(eb.name).dvs.filterNot(eb.dvs.toSet)
-      }.distinct
-      val dv = spark.read.parquet(
-        deltaDvs.map(n => new Path(dir, n).toString): _*)
-      return fromEntries(spark, dir, schema, beforeE, mb.statsCol,
-          withFileCol = true)
-        .join(broadcast(dv),
-          element_at(split(col("__mt_file"), "/"), -1) === col("__dv_file") &&
-            col(key) === col("__dv_k"),
-          "left_semi")
-        .drop("__mt_file")
+      sp.mb.statsCol.contains(key) && sp.ma.statsCol.contains(key)
+    // a dv-only span's feed is exactly its newly-dead rows, as deletes
+    // (no shuffle at all). Mixed spans take the key-aligned diff: a
+    // rewrite or append in the span could re-insert a deleted key,
+    // which the diff must classify as an update
+    if (enforcedByLifecycle && sp.newDvs.nonEmpty)
+      return sp.newlyDead
         .withColumn("_change_type", lit("delete"))
         .withColumn("_commit_version", lit(toV))
-    }
-    val before = fromEntries(spark, dir, schema, beforeE, mb.statsCol)
-    val after = fromEntries(spark, dir, schema, afterE, ma.statsCol)
+    val before = sp.before
+    val after = sp.after
     if (!enforcedByLifecycle) {
       val guard = before.select(col(key)).withColumn("__side", lit(fromV))
         .unionByName(after.select(col(key)).withColumn("__side", lit(toV)))
@@ -1445,7 +1477,7 @@ object MergeTable {
             "changed files — changes() requires key-unique snapshots")
       }
     }
-    val cols = schema.fieldNames.toSeq
+    val cols = sp.schema.fieldNames.toSeq
     val b = before.select(col(key).as("__k"),
       struct(cols.map(col): _*).as("__b"))
     val a = after.select(col(key).as("__k"),

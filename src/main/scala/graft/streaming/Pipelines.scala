@@ -1246,12 +1246,15 @@ object Pipelines {
     * composed with `IncrementalView.maintain`: each micro-batch lands
     * on the COW table (latest-per-key collapse, delete markers,
     * file-pruned merge), then the downstream aggregate advances by
-    * applying ONLY that epoch's change feed (manifest-aware — the
-    * maintenance step costs the files the epoch touched). This closes
-    * the reference's whole production loop in one sink: KSQL CDC
-    * records → maintained TABLE → continuously fresh rollup, with
-    * both layers idempotent in state (a replayed epoch re-lands identical
-    * table content, and the MV redo is deterministic in the feed).
+    * folding in ONLY the signed rows of the files that epoch changed
+    * (-1 for the rewritten files' old rows, +1 for their new ones; one
+    * `groupBy` with the prior state, two Spark jobs — the maintenance
+    * step costs the files the epoch touched). `keyCol` keys the apply
+    * only; the rollup's delta needs no key. This closes the
+    * reference's whole production loop in one sink: KSQL CDC records
+    * → maintained TABLE → continuously fresh rollup, with both layers
+    * idempotent in state (a replayed epoch re-lands identical table
+    * content, and the MV redo is deterministic in the changed files).
     * The MV lag is at most the current epoch and catches up on the
     * next batch — same single-maintainer convention as the table ops. */
   def mergeApplyWithMvSink(path: String, mvDir: String, keyCol: String,

@@ -262,4 +262,89 @@ class IncrementalViewSpec extends AnyFunSuite {
     assert(IncrementalView.maintain(spark, path, mvDir, "id", "grp", "amt") == v)
     assert(mv(mvDir) == direct(path))
   }
+
+  test("both stores equal the recompute across a dv-only span, a purge and a NULL-group flip") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ivm_dv").toString
+    val path = s"$root/table"; val mvDir = s"$root/mv"; val mvT = s"$root/mv_table"
+    val base = (0L until 40L).map(k =>
+      (k, Option(if (k % 4 == 0) "a" else if (k % 4 == 1) "b" else "c"), k * 1.25))
+      .toDF("id", "grp", "amt").repartitionByRange(4, col("id"))
+    MergeTable.create(base, path, statsCol = Some("id"))
+    val aggs = Seq("sum" -> "amt")
+    def recompute(): Map[Option[String], (Long, String)] =
+      MergeTable.read(spark, path).groupBy("grp")
+        .agg(count(lit(1)), sum(col("amt").cast("decimal(38,4)")))
+        .collect().map(r => Option(r.getString(0)) ->
+          (r.getLong(1), r.getDecimal(2).stripTrailingZeros.toPlainString)).toMap
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Option[String], (Long, String)] =
+      df.collect().map(r => Option(r.getAs[String]("grp")) -> (r.getAs[Long]("n_rows"),
+        r.getAs[java.math.BigDecimal]("sum_amt").stripTrailingZeros.toPlainString)).toMap
+    def step(what: String): Unit = {
+      val v = MergeTable.latestVersion(spark, path)
+      assert(IncrementalView.maintainAggs(spark, path, mvDir, "id", "grp", aggs) == v)
+      assert(IncrementalView.maintainTable(spark, path, mvT, "id", "grp", aggs) == v)
+      val want = recompute()
+      assert(rows(IncrementalView.read(spark, mvDir)) == want, s"parquet-dir state after $what")
+      assert(rows(IncrementalView.readTable(spark, mvT)) == want, s"MergeTable state after $what")
+    }
+    step("the seed")
+    // merge-on-read deletes: the span only grows deletion vectors
+    val before = MergeTable.latestVersion(spark, path)
+    MergeTable.deleteKeysMor(spark, path, Seq(4L, 5L, 13L, 30L).toDF("id"), "id")
+    assert(MergeTable.latestVersion(spark, path) == before + 1)
+    step("a deleteKeysMor epoch")
+    MergeTable.deleteKeysMor(spark, path, Seq(8L, 22L).toDF("id"), "id")
+    step("a second deleteKeysMor epoch")
+    assert(MergeTable.purgeDeletes(spark, path) > 0)
+    step("purgeDeletes")
+    // COW merge: 1 flips b -> a, 2 flips c -> the NULL group, 50 lands
+    // in the NULL group, and 9 is rewritten with its own values
+    MergeTable.merge(spark, path,
+      Seq((1L, Option("a"), 7.5), (2L, Option.empty[String], 3.0),
+        (50L, Option.empty[String], 0.25), (9L, Option("b"), 11.25))
+        .toDF("id", "grp", "amt"), "id")
+    step("a COW merge with a group flip and a NULL group")
+    assert(recompute().contains(None))
+    // a dv-only span that empties the NULL group
+    MergeTable.deleteKeysMor(spark, path, Seq(2L, 50L).toDF("id"), "id")
+    step("a deleteKeysMor epoch that empties the NULL group")
+    assert(!recompute().contains(None))
+  }
+
+  test("a steady maintain step runs few Spark jobs") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ivm_jobs").toString
+    val path = s"$root/table"; val mvDir = s"$root/mv"
+    val base = (0L until 200L).map(k => (k, s"g${k % 7}", k * 0.5))
+      .toDF("id", "grp", "amt").repartitionByRange(4, col("id"))
+    MergeTable.create(base, path, statsCol = Some("id"))
+    IncrementalView.maintain(spark, path, mvDir, "id", "grp", "amt")
+    def epoch(i: Long) = MergeTable.merge(spark, path,
+      (0L until 10L).map(k => (k * 3 + i, s"g${(k + i) % 7}", i * 1.5))
+        .toDF("id", "grp", "amt"), "id")
+    epoch(1L)
+    IncrementalView.maintain(spark, path, mvDir, "id", "grp", "amt")
+    epoch(2L)
+    // one steady step's Spark jobs, counted under its own job group
+    // (each shuffle stage is its own job under AQE): folding the
+    // signed rows into the prior state is one aggregate's shuffle and
+    // one write
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "mv-steady"))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("mv-steady", "one steady maintain step")
+      try IncrementalView.maintain(spark, path, mvDir, "id", "grp", "amt")
+      finally sc.clearJobGroup()
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() > 0 && jobs.get() <= 2, s"${jobs.get()} jobs in one steady maintain step")
+    assert(mv(mvDir) == direct(path))
+  }
 }
