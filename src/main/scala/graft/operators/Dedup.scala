@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType}
 
 import graft.functions.Text
 
@@ -205,67 +206,137 @@ object Dedup {
   /** Connected components over a near-dup pair list: every document
     * gets the MINIMUM doc id of its component as cluster id — the
     * canonical "duplicate cluster" assignment that chains A~B~C into
-    * one group even when A and C never pair directly.
+    * one group even when A and C never pair directly. Every id that
+    * appears in a pair gets exactly one (id, cluster) row.
     *
-    * Algorithm: iterative min-label propagation with POINTER JUMPING.
-    * The edge table carries both directions plus a SELF-LOOP per node,
-    * so one propagation (label := min over neighbours' labels, the
-    * node's own included) is one keyed join + groupBy. One ROUND is
-    * TWO propagations followed by one pointer jump (label :=
-    * min(label, label-of-label), one more keyed join), which collapses
-    * chains in O(log diameter) rounds instead of O(diameter). All
-    * joins are equi-joins on node ids; per-round state is the narrow
-    * (id, label) pair set. Each round's state is a LAZY snapshot that
-    * truncates lineage, and the round's one action — the exact decimal
-    * SUM of all labels — both materializes it and tests convergence:
-    * labels only ever decrease, so the loop exits on the first round
-    * whose sum is unchanged. The driver never sees the data, only that
-    * sum. With the default localCheckpoint that is one Spark action
-    * per round; a reliable checkpoint (`checkpointDir`) writes its
-    * files in a second job that recomputes the round.
+    * The pair list is snapshotted once (the caller's pair derivation
+    * runs once), and the one action that materializes the snapshot
+    * also counts its pairs and their non-NULL ids. Then one of two
+    * paths runs; both give the same labels.
     *
-    * `maxIters` bounds ROUNDS, not hops: one round is 2 propagations +
-    * 1 jump, so `maxIters = 25` allows up to 50 propagation hops (plus
-    * the jumps' shortcuts) before the loop stops unconverged.
+    * IN ONE TASK, when the list holds at most `InTaskPairs` (2^20)
+    * pairs, both id columns are Long or both are Int, and no id is
+    * NULL: the snapshot coalesces to one partition and a union-find
+    * with union-by-minimum-id runs inside that one executor task. No
+    * shuffle, no per-round action, and nothing data-sized reaches the
+    * driver. Small graphs are where the loop below pays its per-round
+    * fixed cost (planning, scheduling, checkpoint, convergence action)
+    * for a few hundred ids — finishing them in memory is the small-graph
+    * step of Kiveris et al., "Connected Components in MapReduce and
+    * Beyond" (SoCC'14). The returned plan reads the snapshot's blocks,
+    * which outlive this call. Other id types, and lists holding a NULL
+    * id, take the loop.
     *
-    * `checkpointDir`: localCheckpoint (the default) stores round state
-    * in executor block managers — fastest locally, but on a real
-    * cluster an executor loss mid-loop kills the job because the
-    * truncated lineage cannot recompute. Passing a directory (HDFS/S3
-    * on a cluster) switches every round snapshot to a RELIABLE
-    * `checkpoint()` that survives executor loss. Sets the context
-    * checkpoint dir as a side effect; round files accumulate under it
-    * for the life of the session unless
+    * THE DISTRIBUTED LOOP, otherwise: iterative min-label propagation
+    * with POINTER JUMPING. The edge table carries both directions plus
+    * a SELF-LOOP per node, so one propagation (label := min over
+    * neighbours' labels, the node's own included) is one keyed join +
+    * groupBy. One ROUND is TWO propagations followed by one pointer
+    * jump (label := min(label, label-of-label), one more keyed join),
+    * which collapses chains in O(log diameter) rounds instead of
+    * O(diameter). All joins are equi-joins on node ids; per-round
+    * state is the narrow (id, label) pair set. Each round's state is a
+    * LAZY snapshot that truncates lineage, and the round's one action
+    * — the exact decimal SUM of all labels — both materializes it and
+    * tests convergence: labels only ever decrease, so the loop exits
+    * on the first round whose sum is unchanged. The driver never sees
+    * the data, only that sum. With the default localCheckpoint that is
+    * one Spark action per round; a reliable checkpoint
+    * (`checkpointDir`) writes its files in a second job that
+    * recomputes the round.
+    *
+    * `maxRounds` bounds the loop's ROUNDS, not hops: one round is 2
+    * propagations + 1 jump, so `maxRounds = 25` allows up to 50
+    * propagation hops (plus the jumps' shortcuts) before the loop
+    * stops unconverged. The in-task path always converges.
+    *
+    * `checkpointDir`: localCheckpoint (the default) stores the pair
+    * snapshot and round state in executor block managers — fastest
+    * locally, but on a real cluster an executor loss mid-loop kills
+    * the job because the truncated lineage cannot recompute. Passing a
+    * directory (HDFS/S3 on a cluster) switches every snapshot to a
+    * RELIABLE `checkpoint()` that survives executor loss. Sets the
+    * context checkpoint dir as a side effect; snapshot files accumulate
+    * under it for the life of the session unless
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true`.
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "a_id",
-                          bCol: String = "b_id", maxIters: Int = 25,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
+                          bCol: String = "b_id", maxRounds: Int = 25,
+                          checkpointDir: Option[String] = None): DataFrame =
+    components(pairs, aCol, bCol, maxRounds, checkpointDir, InTaskPairs)
+
+  /** Most pairs [[connectedComponents]] finishes in one task: 2^20
+    * pairs of Long ids are 16 MB, and the task's arrays stay under
+    * ~64 MB. */
+  private val InTaskPairs = 1L << 20
+
+  /** [[connectedComponents]] with its in-task bound explicit: -1
+    * forces the distributed loop, `Long.MaxValue` the in-task path
+    * (for ids it supports). */
+  private[graft] def components(pairs: DataFrame, aCol: String, bCol: String,
+                                maxRounds: Int, checkpointDir: Option[String],
+                                inTaskPairs: Long): DataFrame = {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    // LAZY snapshot: the round's single action (labelSum below) both
-    // materializes the truncated-lineage round state AND returns the
-    // convergence sum — one Spark job per round where the former
-    // eager-checkpoint-then-aggregate shape paid two (guide §1.2: the
-    // loop's cost is per-round fixed overhead, so halving actions
-    // halves it; the checkpointed blocks are identical either way).
     def snapshot(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(eager = false)
       else df.localCheckpoint(eager = false)
-    // materialize the PAIR LIST once before the direction-doubling
-    // union: the union's two branches are two full copies of the
-    // caller's pair derivation (for d20/d37/e14 that is the entire
-    // LSH band self-join + exact verify chain — measured as the two
-    // heaviest stages of the old d20 profile, ~twice the verify cost),
-    // and only the narrow (a_id, b_id) rows are needed twice.
-    // EAGER: the direction-doubling union below reads p0 from FOUR
-    // branches inside one job — with a lazy snapshot, concurrent tasks
-    // from different branches race to compute the heavy pair-derivation
-    // partitions up to 4× before blocks land; one materializing action
-    // here guarantees the derivation runs once (ADVICE r13)
-    val p0 =
-      if (checkpointDir.isDefined) pairs.select(col(aCol), col(bCol)).checkpoint()
-      else pairs.select(col(aCol), col(bCol)).localCheckpoint()
+    // the PAIR LIST is snapshotted once: the loop's edge union reads
+    // it from four branches, and each branch would otherwise rerun the
+    // caller's pair derivation (for d20/d37/e14 the whole LSH band
+    // self-join + exact verify chain). This count is the snapshot's
+    // materializing action, BEFORE anything else reads it, so the
+    // derivation runs once — no race between the union's branches to
+    // compute the same partitions
+    val p0 = snapshot(pairs.select(col(aCol), col(bCol)))
+    val counts = p0.agg(count(lit(1)), count(col(aCol)), count(col(bCol))).collect()(0)
+    val n = counts.getLong(0)
+    val idType = p0.schema(aCol).dataType
+    val inTask = n <= inTaskPairs && counts.getLong(1) == n && counts.getLong(2) == n &&
+      p0.schema(bCol).dataType == idType && (idType == LongType || idType == IntegerType)
+    if (inTask) {
+      val longPairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+      p0.select(col(aCol).cast(LongType), col(bCol).cast(LongType)).as(longPairs)
+        .coalesce(1)
+        .mapPartitions(unionFind)(longPairs)
+        .select(col("_1").cast(idType).as("id"), col("_2").cast(idType).as("cluster"))
+    } else roundLoop(p0, aCol, bCol, n, maxRounds, snapshot)
+  }
+
+  /** Union-find over one task's (a, b) pairs: every id in a pair with
+    * the minimum id of its component. Ids are numbered by rank in the
+    * sorted distinct id set, so union by minimum NUMBER is union by
+    * minimum id, and every root is its component's minimum. */
+  private def unionFind(pairs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val (as, bs) = {
+      val a = Array.newBuilder[Long]; val b = Array.newBuilder[Long]
+      pairs.foreach { case (x, y) => a += x; b += y }
+      (a.result(), b.result())
+    }
+    val sorted = as ++ bs
+    java.util.Arrays.sort(sorted)
+    var nIds = 0
+    sorted.indices.foreach { i =>
+      if (i == 0 || sorted(i) != sorted(nIds - 1)) { sorted(nIds) = sorted(i); nIds += 1 }
+    }
+    val ids = java.util.Arrays.copyOf(sorted, nIds)
+    val parent = Array.range(0, nIds)
+    def find(i: Int): Int = { // path halving
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    as.indices.foreach { k =>
+      val ra = find(java.util.Arrays.binarySearch(ids, as(k)))
+      val rb = find(java.util.Arrays.binarySearch(ids, bs(k)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Iterator.tabulate(nIds)(i => (ids(i), ids(find(i))))
+  }
+
+  /** The distributed loop of [[connectedComponents]] over the
+    * materialized pair snapshot `p0` of `n` pairs. */
+  private def roundLoop(p0: DataFrame, aCol: String, bCol: String, n: Long,
+                        maxRounds: Int, snapshot: DataFrame => DataFrame): DataFrame = {
     // edges persist ALREADY HASH-PARTITIONED on dst — the per-round
     // neighbour-min join probes edges BY dst every round, so pinning
     // the partitioning into the cached blocks removes one exchange of
@@ -290,7 +361,11 @@ object Dedup {
       .sortWithinPartitions("dst")
       .persist()
     // seed one propagation ahead: label = min(id, min neighbour id)
-    // (the self-loop makes the groupBy min exactly that)
+    // (the self-loop makes the groupBy min exactly that). LAZY
+    // snapshots: the round's single action (labelSum below) both
+    // materializes the truncated-lineage round state AND returns the
+    // convergence sum — one Spark job per round where an
+    // eager-checkpoint-then-aggregate shape would pay two
     var labels = snapshot(edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("label")))
     // labels only ever DECREASE, so the (exact, overflow-free) decimal
@@ -303,8 +378,8 @@ object Dedup {
       if (d == null) BigDecimal(0) else BigDecimal(d) // null = empty graph
     }
     var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = labels.isEmpty // no pairs → nothing to propagate
+    var round = 0
+    var converged = n == 0 // no pairs → nothing to propagate
     // one pointer jump: label := min(label, label(label)) — composes
     // the label map with itself, so reach doubles per jump
     def jump(l: DataFrame): DataFrame = {
@@ -318,7 +393,7 @@ object Dedup {
     def prop(l: DataFrame): DataFrame =
       edges.join(l, edges("dst") === l("id"))
         .groupBy(edges("src").as("id")).agg(min(col("label")).as("label"))
-    while (!converged && iter < maxIters) {
+    while (!converged && round < maxRounds) {
       // TWO propagations + one jump per MATERIALIZED round: the
       // measured d20/e14 convergence tail moves one edge-hop per
       // propagation (label chains stay short, so extra jumps buy
@@ -332,17 +407,17 @@ object Dedup {
       val next = snapshot(prop(jump(prop(labels))))
       val s = labelSum(next)
       if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter sum=$s (prev=$prevSum)")
+        System.err.println(s"[cc] round $round sum=$s (prev=$prevSum)")
       converged = s == prevSum
       prevSum = s
       // the superseded round's checkpointed blocks are dead state —
       // release them instead of pinning every round in the block manager
       labels.unpersist()
       labels = next
-      iter += 1
+      round += 1
     }
     if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged after $iter rounds")
+      System.err.println(s"[cc] converged after $round rounds")
     // release everything but the final round's snapshot: edges and the
     // pair-list snapshot are dead once the loop exits (the returned
     // plan reads only `labels`' checkpoint blocks, which must outlive

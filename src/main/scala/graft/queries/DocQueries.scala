@@ -271,10 +271,12 @@ object DocQueries {
 
     // duplicate-cluster assignment: connected components over the
     // banded SimHash near-dup pairs — A~B~C chains collapse into one
-    // cluster labeled by the minimum member id. Pointer-jumping
-    // min-label propagation (see Dedup.connectedComponents): O(log
-    // diameter) rounds of keyed equi-joins over narrow (id, label)
-    // state; never materializes anything driver-side.
+    // cluster labeled by the minimum member id. Dedup.connectedComponents
+    // finishes a pair list this small with union-find in one task (one
+    // pair-count action, no per-round jobs); a large one takes the
+    // pointer-jumping min-label loop, O(log diameter) rounds of keyed
+    // equi-joins over narrow (id, label) state. Neither path
+    // materializes anything driver-side.
     "d20_dedup_clusters" -> q { (s, d) =>
       Dedup.clusterMap(table(s, d, "documents")).orderBy("doc_id")
     },

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -119,21 +120,97 @@ class DedupSpec extends AnyFunSuite {
 
   test("connected components with a reliable checkpoint dir answer identically") {
     import spark.implicits._
-    // the cluster path: round state goes to a reliable checkpoint()
-    // (survives executor loss) instead of executor-local blocks
+    // the cluster path: the pair snapshot and round state go to a
+    // reliable checkpoint() (survives executor loss) instead of
+    // executor-local blocks — on the distributed loop, forced, so its
+    // round checkpoints are the ones under test
     val dir = java.nio.file.Files.createTempDirectory("graft-ccckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L), (22L, 23L), (23L, 24L), (24L, 25L))
       .toDF("a_id", "b_id")
-    val got = Dedup.connectedComponents(pairs, checkpointDir = Some(dir)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = Dedup.components(pairs, "a_id", "b_id", 25, Some(dir), inTaskPairs = -1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L, 25L -> 20L))
-    // the rounds really checkpointed: files exist under the dir
-    def files(p: java.io.File): Int =
-      if (p.isDirectory) p.listFiles().map(files).sum else 1
-    assert(files(new java.io.File(dir)) > 0, "no reliable checkpoint files written")
+    // the rounds really checkpointed: round directories exist under the
+    // dir beyond the pair snapshot's one
+    val written = new java.io.File(dir).listFiles().flatMap(d => Option(d.listFiles()))
+      .flatten.count(_.getName.startsWith("rdd-"))
+    assert(written > 1, s"$written reliable checkpoint RDD dirs written")
+  }
+
+  /** The (id, cluster) rows of both paths on one pair list, forced:
+    * the in-task union-find and the distributed loop. */
+  private def bothPaths(pairs: DataFrame): (Seq[(Any, Any)], Seq[(Any, Any)]) = {
+    def run(bound: Long) = {
+      val out = Dedup.components(pairs, "a_id", "b_id", 25, None, bound)
+      assert(out.schema.map(_.dataType) == Seq.fill(2)(pairs.schema("a_id").dataType))
+      out.collect().map(r => (r.get(0), r.get(1))).toSeq.sortBy(_._1.toString)
+    }
+    (run(Long.MaxValue), run(-1))
+  }
+
+  test("connected components: the in-task path and the distributed loop give the same labels") {
+    import spark.implicits._
+    // a chain with a self-pair and a reversed duplicate, a 45-hop path
+    // listed in shuffled order with every third pair reversed, a star
+    // whose centre is not its minimum, duplicate pairs, and an
+    // isolated self-pair
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 2L), (4L, 3L))
+    val path = new scala.util.Random(7).shuffle((0L until 45L).map(i =>
+      if (i % 3 == 0) (101L + i, 100L + i) else (100L + i, 101L + i)))
+    val star = (300L to 320L).filter(_ != 310L).map(l => (310L, l))
+    val dups = Seq((50L, 51L), (50L, 51L), (51L, 50L), (7L, 7L))
+    val all = chain ++ path ++ star ++ dups
+    // truth: each id's component minimum, by relaxation to a fixpoint
+    var truth = all.flatMap(p => Seq(p._1, p._2)).map(i => i -> i).toMap
+    var moved = true
+    while (moved) {
+      val next = all.foldLeft(truth) { case (t, (a, b)) =>
+        val m = math.min(t(a), t(b)); t.updated(a, m).updated(b, m)
+      }
+      moved = next != truth
+      truth = next
+    }
+    val longs = all.toDF("a_id", "b_id")
+    val (inTask, loop) = bothPaths(longs)
+    assert(inTask == loop)
+    assert(inTask.map { case (i, c) => i.asInstanceOf[Long] -> c.asInstanceOf[Long] }.toMap == truth)
+    assert(truth(145L) == 100L && truth(320L) == 300L && truth(7L) == 7L)
+    // Int ids stay Int on both paths, with the same labels
+    val (inTaskInt, loopInt) = bothPaths(all.map { case (a, b) => (a.toInt, b.toInt) }.toDF("a_id", "b_id"))
+    assert(inTaskInt == loopInt)
+    assert(inTaskInt.map { case (i, c) => (i.toString, c.toString) } ==
+      inTask.map { case (i, c) => (i.toString, c.toString) })
+    // the empty pair list
+    val (inTaskNone, loopNone) = bothPaths(Seq.empty[(Long, Long)].toDF("a_id", "b_id"))
+    assert(inTaskNone.isEmpty && loopNone.isEmpty)
+  }
+
+  test("connected components of a small graph run a fixed handful of jobs") {
+    import spark.implicits._
+    // a 60-hop path: the distributed loop needs several rounds of
+    // several jobs each, the in-task path one pair count and one task
+    val pairs = (0L until 60L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "cc-small"))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val labels = try {
+      sc.setJobGroup("cc-small", "connected components of a small graph")
+      try Dedup.connectedComponents(pairs).collect()
+      finally sc.clearJobGroup()
+    } finally {
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(labels.length == 61 && labels.forall(_.getLong(1) == 0L))
+    assert(jobs.get() > 0 && jobs.get() <= 4, s"${jobs.get()} jobs for a 61-id graph")
   }
 
   test("d21 token shares cover the whole corpus") {

@@ -347,4 +347,62 @@ class IncrementalViewSpec extends AnyFunSuite {
     assert(jobs.get() > 0 && jobs.get() <= 2, s"${jobs.get()} jobs in one steady maintain step")
     assert(mv(mvDir) == direct(path))
   }
+
+  test("a sum whose non-NULL values were all deleted reads NULL in both stores, as a recompute") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ivm_nullsum").toString
+    val path = s"$root/table"; val mvDir = s"$root/mv"; val mvT = s"$root/mv_table"
+    MergeTable.create(Seq((1L, "g", Option(5.0)), (2L, "g", Option.empty[Double]))
+      .toDF("id", "grp", "amt"), path, statsCol = Some("id"))
+    def step(): Unit = {
+      IncrementalView.maintain(spark, path, mvDir, "id", "grp", "amt")
+      IncrementalView.maintainTable(spark, path, mvT, "id", "grp", Seq("sum" -> "amt"))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Any)] =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.get(2))).toSeq
+    def recompute(): Seq[(String, Long, Any)] = rows(MergeTable.read(spark, path)
+      .groupBy("grp").agg(count(lit(1)), sum(col("amt").cast("decimal(38,4)"))))
+    step()
+    MergeTable.deleteKeys(spark, path, Seq(1L).toDF("id"), "id")
+    step()
+    assert(recompute() == Seq(("g", 1L, null)))
+    assert(rows(IncrementalView.read(spark, mvDir)) == recompute())
+    assert(rows(IncrementalView.readTable(spark, mvT)) == recompute())
+    // the readers' columns are the state's, without the counts
+    assert(IncrementalView.read(spark, mvDir).columns.toSeq == Seq("grp", "n_rows", "sum_val"))
+    assert(IncrementalView.readTable(spark, mvT).columns.toSeq == Seq("grp", "n_rows", "sum_amt"))
+    // a non-NULL value lands in the group again: the sum is back
+    MergeTable.merge(spark, path, Seq((3L, "g", Option(2.5))).toDF("id", "grp", "amt"), "id")
+    step()
+    assert(recompute() == Seq(("g", 2L, new java.math.BigDecimal("2.5000"))))
+    assert(rows(IncrementalView.read(spark, mvDir)) == recompute())
+    assert(rows(IncrementalView.readTable(spark, mvT)) == recompute())
+  }
+
+  test("a state written without the non-NULL counts reseeds in both stores") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ivm_oldstate").toString
+    val path = s"$root/table"; val mvDir = s"$root/mv"; val mvT = s"$root/mv_table"
+    MergeTable.create((0L until 12L).map(k => (k, s"g${k % 3}", k * 0.5))
+      .toDF("id", "grp", "amt"), path, statsCol = Some("id"))
+    val v = MergeTable.latestVersion(spark, path)
+    // both stores hold a complete state at the table's version, in the
+    // shape without counts and with numbers no recompute gives
+    Seq(("g0", 99L, "1.0")).toDF("grp", "n_rows", "s")
+      .select(col("grp"), col("n_rows"), col("s").cast("decimal(38,4)").as("sum_val"))
+      .write.parquet(s"$mvDir/v=$v")
+    Files.createFile(java.nio.file.Paths.get(s"$mvDir/v=$v/_DONE"))
+    MergeTable.create(Seq(("Vg0", Option("g0"), 99L, "1.0", Option.empty[Long]),
+      ("W", Option.empty[String], 0L, "0", Option(v.toLong)))
+      .toDF("__g_key", "grp", "n_rows", "s", "__w")
+      .select(col("__g_key"), col("grp"), col("n_rows"),
+        col("s").cast("decimal(38,4)").as("sum_amt"), col("__w")),
+      mvT, statsCol = Some("__g_key"))
+    assert(IncrementalView.maintain(spark, path, mvDir, "id", "grp", "amt") == v)
+    assert(mv(mvDir) == direct(path))
+    assert(IncrementalView.maintainTable(spark, path, mvT, "id", "grp", Seq("sum" -> "amt")) == v)
+    assert(IncrementalView.readTable(spark, mvT).collect()
+      .map(r => r.getString(0) -> (r.getLong(1),
+        r.getDecimal(2).stripTrailingZeros.toPlainString)).toMap == direct(path))
+  }
 }
