@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.functions.{decode, lit, unhex}
+
+import graft.functions.T24
 
 /** Session-level runtime configuration applied idempotently at the head
   * of every engine entry point. The driver owns SparkSession creation
@@ -18,15 +22,14 @@ object Engine {
     spark
   }
 
-  /** The engine's SQL function surface as (name, builder) pairs —
-    * shared by session-level registration ([[registerFunctions]]) and
-    * the `spark.sql.extensions` deployment path ([[GraftExtensions]]). */
-  lazy val functionBuilders: Seq[(String,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression]
-        => org.apache.spark.sql.catalyst.expressions.Expression)] = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
-    import graft.functions.T24
-    val out = Seq.newBuilder[(String, Seq[Expression] => Expression)]
+  /** The engine's SQL function surface by name — shared by
+    * session-level registration ([[registerFunctions]]), the
+    * `spark.sql.extensions` deployment path ([[GraftExtensions]]) and
+    * `SchemaConverter`, which expands these names while it parses a
+    * field's statement text, so its Column pipeline needs no
+    * registration. */
+  lazy val functionBuilders: Map[String, Seq[Expression] => Expression] = {
+    val out = Map.newBuilder[String, Seq[Expression] => Expression]
     def ensure(name: String)(builder: Seq[Expression] => Expression): Unit =
       out += name -> builder
     def litOf(e: Expression, what: String): Any = e match {
@@ -35,22 +38,6 @@ object Engine {
     }
     def litStr(e: Expression, what: String): String = litOf(e, what).toString
     def litInt(e: Expression, what: String): Int = litStr(e, what).trim.toInt
-    // Registry builders must return real catalyst trees (a lazy Column
-    // wrapper would reach codegen unresolved): parse a SQL template
-    // eagerly and splice the argument expressions at __ARGn__. The
-    // still-unresolved built-in functions inside resolve on the
-    // analyzer's next fixed-point iteration.
-    val ArgRef = """__ARG(\d+)__""".r
-    def sqlFn(template: String, args: Expression*): Expression =
-      org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-        .parseExpression(template).transformUp {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-              if a.nameParts.lengthCompare(1) == 0 =>
-            a.name match {
-              case ArgRef(i) => args(i.toInt)
-              case _ => a
-            }
-        }
 
     ensure("simhash64")(exprs => graft.plans.SimHash64(exprs.head))
     ensure("cosine_sim")(exprs => graft.plans.CosineSim(exprs(0), exprs(1)))
@@ -88,51 +75,41 @@ object Engine {
               else graft.operators.Dedup.WinnowModulus
       graft.plans.WinnowFingerprints(exprs.head, k, w, p)
     }
-    // T24 surface (reference controllers/index.js:57-170, 293-403):
-    // KSQL-shaped statements using these names run through spark.sql,
-    // resolving to the same native/codegen expressions as the Column API.
-    ensure("parse_date") { exprs =>
-      val fmt = if (exprs.length > 1) litStr(exprs(1), "parse_date fmt") else "yyyyMMdd"
-      Cast(graft.plans.TryParseTimestamp(exprs.head, fmt),
-        org.apache.spark.sql.types.DateType)
+    // T24 surface (reference controllers/index.js:57-170, 293-403): each
+    // name builds from its one definition in graft.functions.T24 (or the
+    // native expression), so KSQL-shaped statements through spark.sql
+    // and the Column pipeline run the same native/codegen expressions.
+    def t24(name: String)(f: Seq[Expression] => Column): Unit =
+      ensure(name)(exprs => GraftBridge.expression(f(exprs)))
+    def c(e: Expression): Column = GraftBridge.column(e)
+    t24("parse_date") { e =>
+      if (e.length > 1) T24.parseDate(c(e(0)), litStr(e(1), "parse_date fmt"))
+      else T24.parseDate(c(e(0)))
     }
-    ensure("parse_timestamp") { exprs =>
-      val fmt = if (exprs.length > 1) litStr(exprs(1), "parse_timestamp fmt") else "yyMMddHHmm"
-      graft.plans.TryParseTimestamp(exprs.head, fmt)
+    t24("parse_timestamp") { e =>
+      if (e.length > 1) T24.parseTimestamp(c(e(0)), litStr(e(1), "parse_timestamp fmt"))
+      else T24.parseTimestamp(c(e(0)))
     }
-    ensure("seab_field") { exprs =>
-      // delimiter is a literal split-by string, not a regex — quote it
-      val delim = java.util.regex.Pattern.quote(litStr(exprs(1), "seab_field delim"))
-      sqlFn("TRY_ELEMENT_AT(SPLIT(__ARG0__, __ARG1__), __ARG2__)",
-        exprs(0), Literal(delim), exprs(2))
+    t24("seab_field") { e =>
+      val delim = litStr(e(1), "seab_field delim")
+      require(delim.nonEmpty, "seab_field delim must be a non-empty string")
+      T24.seabField(c(e(0)), delim, c(e(2)))
     }
     // SEAB_HEXTOTEXT(FROM_BYTES(x,'hex')) — the reference's hex-decode
-    // pair (controllers/index.js:307)
-    ensure("seab_hextotext")(exprs => sqlFn("DECODE(__ARG0__, 'UTF-8')", exprs.head))
-    ensure("from_bytes") { exprs =>
-      val enc = if (exprs.length > 1) litStr(exprs(1), "from_bytes encoding") else "hex"
+    // pair (controllers/index.js:307); together they are T24.hexToText
+    t24("seab_hextotext")(e => decode(c(e.head), "UTF-8"))
+    t24("from_bytes") { e =>
+      val enc = if (e.length > 1) litStr(e(1), "from_bytes encoding") else "hex"
       require(enc.equalsIgnoreCase("hex"), s"from_bytes: only 'hex' is supported, got $enc")
-      sqlFn("UNHEX(__ARG0__)", exprs.head)
+      unhex(c(e.head))
     }
-    ensure("mv_split")(exprs =>
-      sqlFn(s"FILTER(SPLIT(__ARG0__, '${T24.MvMarker}'), x -> x <> '')", exprs.head))
-    ensure("mv_index")(exprs =>
-      sqlFn(s"TRY_ELEMENT_AT(FILTER(SPLIT(__ARG0__, '${T24.MvMarker}'), x -> x <> ''), __ARG1__)",
-        exprs(0), exprs(1)))
-    ensure("mv_join") { exprs =>
-      val d: Expression = if (exprs.length > 1) exprs(1) else Literal(" ")
-      sqlFn(s"ARRAY_JOIN(FILTER(SPLIT(REGEXP_REPLACE(__ARG0__, '${T24.MvLead}', ''), " +
-        s"'#(s?[0-9]+:)?'), x -> x <> ''), __ARG1__)", exprs(0), d)
-    }
-    ensure("inputter_his")(exprs =>
-      sqlFn(s"SUBSTRING(REGEXP_REPLACE(ARRAY_JOIN(TRANSFORM(" +
-        s"SPLIT(REGEXP_REPLACE(__ARG0__, '${T24.MvLead}', ''), '#(s?[0-9]*:)?'), " +
-        s"x -> TRY_ELEMENT_AT(SPLIT(x, '_'), 2)), ' ', 'null'), 'null ', ''), 1, 4000)",
-        exprs.head))
+    t24("mv_split")(e => T24.mvSplit(c(e.head)))
+    t24("mv_index")(e => T24.mvIndex(c(e(0)), c(e(1))))
+    t24("mv_join")(e => T24.mvJoin(c(e(0)), if (e.length > 1) c(e(1)) else lit(" ")))
+    t24("inputter_his")(e => T24.inputterHis(c(e.head)))
     // the BLOB FE/FEFD packed-record decode and the subvalue split —
     // registered so the emitted BLOB_PARSE_T24 statement TEXT resolves
-    // to the SAME native expressions as the Column pipeline (text-level
-    // parity is parity by construction, not by re-derivation)
+    // to the SAME native expressions as the Column pipeline
     ensure("mv_decode")(exprs => graft.plans.MvDecode(exprs.head))
     ensure("split_char")(exprs =>
       graft.plans.SplitChar(exprs(0), litStr(exprs(1), "split_char separator")))

@@ -14,8 +14,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * MV_JOIN, …) at session build on every driver/executor, so
   * reference-shaped SQL runs with no per-session
   * `Engine.registerFunctions` call — the standard
-  * `SparkSessionExtensions` injection path. Also injects the
-  * [[graft.plans.IntersectCountRewrite]] optimizer rule, which swaps
+  * `SparkSessionExtensions` injection path. (SchemaConverter's Column
+  * pipeline needs neither: it expands the same builders itself.) Also
+  * injects the [[graft.plans.IntersectCountRewrite]] optimizer rule, which swaps
   * `size(array_intersect(a, b))` over long arrays for the
   * materialization-free native count on the dedup verify paths.
   */

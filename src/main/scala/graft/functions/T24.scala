@@ -5,7 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** The KSQL scalar/array surface the reference's generated pipelines
   * use, re-expressed as compositions of `org.apache.spark.sql.functions`
-  * so every call stays inside WholeStageCodegen (no UDFs).
+  * and the native expressions of `graft.plans`, so every call stays
+  * inside WholeStageCodegen (no UDFs). This is the one definition of
+  * each function: the SQL names in `Engine.functionBuilders` (and so
+  * `spark.sql` and `SchemaConverter`) build from it.
   *
   * T24 multivalue encoding (reference `src/controllers/index.js:71-95`):
   * a field holds `1:v1#2:v2#…` — positional markers `N:` (optionally
@@ -41,12 +44,14 @@ object T24 {
   /** 1-based positional element of a multivalue string (KSQL arrays are
     * 1-based; out-of-range is null, so `try_element_at` — ANSI
     * `element_at` would throw) — reference `controllers/index.js:92-95`. */
-  def mvIndex(c: Column, n: Int): Column = try_element_at(mvSplit(c), lit(n))
+  def mvIndex(c: Column, n: Column): Column = try_element_at(mvSplit(c), n)
 
   /** string-join over a multivalue with a delimiter — reference
     * `controllers/index.js:75-83` (ARRAY_JOIN∘FILTER∘REGEXP_SPLIT with
-    * the leading marker stripped first). */
-  def mvJoin(c: Column, delim: String): Column = array_join(mvSplit(c), delim)
+    * the leading marker stripped first). The delimiter may be any
+    * string column, so the native `ArrayJoin` is built directly. */
+  def mvJoin(c: Column, delim: Column): Column =
+    nat(org.apache.spark.sql.catalyst.expressions.ArrayJoin(ex(mvSplit(c)), ex(delim), None))
 
   /** The composed regex formulation of [[mvJoin]] — property-test
     * oracle (lead-marker strip + split + filter ≡ one marker scan). */
@@ -57,32 +62,23 @@ object T24 {
   /** SEAB_FIELD(x, delim, n): split by delimiter, take the n-th (1-based)
     * component — reference `controllers/index.js:90-91`. Returns null when
     * the component is absent (KSQL out-of-range array access). */
-  def seabField(c: Column, delim: String, n: Int): Column =
-    try_element_at(nat(graft.plans.SplitChar(ex(c), delim)), lit(n))
+  def seabField(c: Column, delim: String, n: Column): Column =
+    try_element_at(nat(graft.plans.SplitChar(ex(c), delim)), n)
 
   /** SEAB_HEXTOTEXT(FROM_BYTES(x,'hex')): hex string → UTF-8 text —
     * reference `controllers/index.js:307`. */
   def hexToText(c: Column): Column = decode(unhex(c), "UTF-8")
 
-  private def tryParse(c: Column, fmt: String): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.TryParseTimestamp(
-        org.apache.spark.sql.GraftBridge.expression(c), fmt))
-
-  /** PARSE_DATE(x, 'yyyyMMdd') — reference `controllers/index.js:84-85`.
+  /** PARSE_DATE(x [, fmt]) — reference `controllers/index.js:84-85`.
     * Malformed input → null (KSQL never fails the stream on a bad
     * record; ANSI `to_date` would throw). Native try-parse keeps the
     * path inside codegen — see `plans/TryParseTimestamp`. */
-  def parseDate(c: Column): Column = parseDate(c, "yyyyMMdd")
+  def parseDate(c: Column, fmt: String = "yyyyMMdd"): Column =
+    parseTimestamp(c, fmt).cast("date")
 
-  /** PARSE_DATE with an explicit format (the KSQL two-arg form). */
-  def parseDate(c: Column, fmt: String): Column = tryParse(c, fmt).cast("date")
-
-  /** PARSE_TIMESTAMP(x, 'yyMMddHHmm') — reference `controllers/index.js:86-87`. */
-  def parseTimestamp(c: Column): Column = parseTimestamp(c, "yyMMddHHmm")
-
-  /** PARSE_TIMESTAMP with an explicit format (the KSQL two-arg form). */
-  def parseTimestamp(c: Column, fmt: String): Column = tryParse(c, fmt)
+  /** PARSE_TIMESTAMP(x [, fmt]) — reference `controllers/index.js:86-87`. */
+  def parseTimestamp(c: Column, fmt: String = "yyMMddHHmm"): Column =
+    nat(graft.plans.TryParseTimestamp(ex(c), fmt))
 
   /** The reference's fixed SUBSTRING(x,1,35) truncation transform
     * (`controllers/index.js:88-89`). */
@@ -97,7 +93,7 @@ object T24 {
       regexp_replace(
         array_join(
           transform(split(regexp_replace(c, MvLead, ""), "#(s?[0-9]*:)?"),
-            x => seabField(x, "_", 2)),
+            x => seabField(x, "_", lit(2))),
           " ", "null"),
         "null ", ""),
       1, 4000)

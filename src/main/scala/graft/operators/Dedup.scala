@@ -406,8 +406,6 @@ object Dedup {
       // ever decrease, so the sum-based convergence test is unchanged.
       val next = snapshot(prop(jump(prop(labels))))
       val s = labelSum(next)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $round sum=$s (prev=$prevSum)")
       converged = s == prevSum
       prevSum = s
       // the superseded round's checkpointed blocks are dead state —
@@ -416,8 +414,6 @@ object Dedup {
       labels = next
       round += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged after $round rounds")
     // release everything but the final round's snapshot: edges and the
     // pair-list snapshot are dead once the loop exits (the returned
     // plan reads only `labels`' checkpoint blocks, which must outlive

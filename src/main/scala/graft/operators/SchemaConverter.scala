@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 import graft.functions.T24
@@ -24,11 +24,15 @@ case class FieldSpec(
   *
   * The reference compiles a schema document into KSQL *text* (RAW →
   * MAPPED → MULTIVALUE → SINK statements, `controllers/index.js:406-623`).
-  * Here the same schema compiles directly into Catalyst `Column` trees
-  * over a raw DataFrame (`RECID` string + `XMLRECORD map<string,string>`,
-  * or a packed hex `BLOB`), so pushdown/pruning/codegen apply to the
-  * generated pipeline. A SQL text emitter (`mappedSql`) keeps parity with
-  * the reference's statement-generating API surface.
+  * Here one dispatch, [[sqlField]], writes each field's transform chain
+  * as KSQL-shaped statement text. The statement emitters (`mappedSql`,
+  * …) render that text for `spark.sql`, and the Column pipeline
+  * ([[compileField]]) parses the same text into a Catalyst tree over a
+  * raw DataFrame (`RECID` string + `XMLRECORD map<string,string>`, or a
+  * packed hex `BLOB`), so pushdown/pruning/codegen apply to the
+  * generated pipeline. Either way every KSQL function name resolves to
+  * its one definition in `graft.functions.T24`, through
+  * `Engine.functionBuilders`.
   *
   * Transformation grammar (reference `controllers/index.js:57-170`):
   *  - `""`              field passthrough `XMLRECORD['NAME']`
@@ -78,21 +82,28 @@ object SchemaConverter {
   /** `nested` second-level template: `FUNC($) [ALIAS]` (`:149-153`). */
   private val NestedT = """(?s)^(.*\))\s*(\S*)\s*$""".r
 
-  /** Attribute name spliced into template SQL where `$` appeared; the
-    * parsed tree has the input column's expression substituted at every
-    * such reference — the reference's string substitution, but the
-    * result is a Catalyst tree, not text. */
+  /** Attribute name [[compileField]] hands to [[sqlField]] as the input;
+    * the parsed tree has the input column's expression substituted at
+    * every such reference — the reference's string substitution, but
+    * the result is a Catalyst tree, not text. */
   private val Placeholder = "__GRAFT_IN__"
 
-  private def spliceSql(sqlTemplate: String, input: Column): Column = {
-    val inExpr = org.apache.spark.sql.GraftBridge.expression(input)
-    // parse eagerly (Column's expr() defers parsing to analysis, which
-    // would hide the placeholder from the transform below)
+  /** Parse statement text eagerly (Column's expr() defers parsing to
+    * analysis, which would hide the placeholder from the transform
+    * below), splice `input` in at the placeholder, and expand the
+    * engine's own function names from `Engine.functionBuilders` — so
+    * the Column pipeline needs no session registration. */
+  private def spliceSql(sqlText: String, input: Column): Column = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+    val inExpr = GraftBridge.expression(input)
+    val engineFns = graft.Engine.functionBuilders
     val parsed = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-      .parseExpression(sqlTemplate)
-    org.apache.spark.sql.GraftBridge.column(parsed.transformUp {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-          if a.nameParts == Seq(Placeholder) => inExpr
+      .parseExpression(sqlText)
+    GraftBridge.column(parsed.transformUp {
+      case a: UnresolvedAttribute if a.nameParts == Seq(Placeholder) => inExpr
+      case f: UnresolvedFunction if f.nameParts.length == 1 &&
+          engineFns.contains(f.nameParts.head.toLowerCase(java.util.Locale.ROOT)) =>
+        engineFns(f.nameParts.head.toLowerCase(java.util.Locale.ROOT))(f.arguments)
     })
   }
 
@@ -118,19 +129,11 @@ object SchemaConverter {
       case _ => false
     }
 
-  /** The XML-record input column for a field: the T24 layout stores
+  /** The XML-record input of a field: the T24 layout stores
     * multivalued fields under `NAME_multivalue` (and the INPUTTER_HIS
     * audit field reads `INPUTTER_multivalue`, reference `:70-72`); the
     * coalesce accepts either layout, so schemas written for the
     * reference and this engine's plain-key tests both resolve. */
-  private def recordInput(spec: FieldSpec): Column =
-    if (spec.name == "INPUTTER_HIS")
-      coalesce(col(Record)("INPUTTER_multivalue"), col(Record)("INPUTTER"))
-    else if (readsMultivalue(spec.transformation))
-      coalesce(col(Record)(spec.name + "_multivalue"), col(Record)(spec.name))
-    else col(Record)(spec.name)
-
-  /** SQL mirror of [[recordInput]]. */
   private def recordInputSql(spec: FieldSpec): String =
     if (spec.name == "INPUTTER_HIS")
       s"COALESCE($Record['INPUTTER_multivalue'], $Record['INPUTTER'])"
@@ -150,82 +153,19 @@ object SchemaConverter {
     else ""
   }
 
-  /** SQL of the n-th (1-based) element of a multivalue-encoded string
-    * (reference `:93`: FILTER(REGEXP_SPLIT_TO_ARRAY(…))[n]). */
-  private def elemSql(input: String, n: String): String =
-    s"TRY_ELEMENT_AT(FILTER(SPLIT($input, '${T24.MvMarker}'), x -> x <> ''), $n)"
-
   /** Compile one field's full transform chain over its input value
-    * column: transformation dispatch → optional `nested` wrap → CAST.
-    * Returns the output column and its (possibly template-aliased)
-    * name. Template `FUNC` names resolve through the session registry —
-    * `Engine.registerFunctions` provides the KSQL surface (PARSE_DATE,
-    * SEAB_FIELD, …) as native expressions.
-    */
-  def compileField(value: Column, spec: FieldSpec,
-                   recId: Column = col(RecId)): (Column, String) = {
-    val defaultName = outputName(spec)
-    // the INPUTTER_HIS field NAME forces the audit transform regardless
-    // of its transformation (reference :70-72)
-    val (base, name) = if (spec.name == "INPUTTER_HIS")
-      (T24.inputterHis(value), "INPUTTER_HIS")
-    else spec.transformation match {
-      case ""                => (value, defaultName)
-      case "parse_date"      => (T24.parseDate(value), defaultName)
-      case "parse_timestamp" => (T24.parseTimestamp(value), defaultName)
-      case "substring"       => (T24.substr35(value), defaultName)
-      case "seab_field"      => (T24.seabField(value, "_", 2), defaultName)
-      case "inputter_his"    => (T24.inputterHis(value), defaultName)
-      case JoinArgT(delim)   => (T24.mvJoin(value, delim), defaultName)
-      case "string-join"     => (T24.mvJoin(value, " "), defaultName)
-      case IndexT(n)         => (T24.mvIndex(value, n.toInt), defaultName)
-      case TemplateT(fn, args, alias) =>
-        val outName = if (alias.nonEmpty) alias.toUpperCase else defaultName
-        // RECID as template input maps to the record key, not the map
-        // (reference :104-105)
-        val input = if (spec.name == RecId) recId else value
-        if (args.contains("$$")) {
-          // `$$` splices the field NAME into the template text
-          // (reference :110-111; exclusive with `$`)
-          (expr(s"${fn.toUpperCase}(${args.replace("$$", spec.name)})"), outName)
-        } else if (args.contains("$")) {
-          (spliceSql(s"${fn.toUpperCase}(${args.replace("$", Placeholder)})", input), outName)
-        } else args match {
-          case MvElemT(n, extra) =>
-            val params =
-              if (extra.exists(c => c != ',' && !c.isWhitespace)) extra
-              else inferredParams(spec.transformation)
-            (spliceSql(s"${fn.toUpperCase}(${elemSql(Placeholder, n)}$params)", input), outName)
-          case _ =>
-            // template body without `$` or `[n]`: raw passthrough
-            (expr(spec.transformation), outName)
-        }
-      // unrecognized transformation: raw-expression passthrough,
-      // emitted verbatim (reference :145-146)
-      case other => (expr(other), defaultName)
-    }
-    val (wrapped, name2) =
-      if (spec.nested.contains("$")) spec.nested match {
-        case NestedT(tpl, alias2) =>
-          (spliceSql(tpl.replace("$", Placeholder), base),
-            if (alias2.nonEmpty) alias2.toUpperCase else name)
-        case _ => (base, name)
-      } else (base, name)
-    // try_cast: a malformed value nulls the field, never the pipeline
-    // (KSQL semantics; ANSI cast would fail the job on one bad record)
-    val cast = if (spec.dataType == "string") wrapped else wrapped.try_cast(spec.dataType)
-    (cast, name2)
+    * column: the parse of its [[sqlField]] text with the input spliced
+    * in. Returns the output column and its (possibly template-aliased)
+    * name. */
+  def compileField(value: Column, spec: FieldSpec): (Column, String) = {
+    val (sqlText, name) = sqlField(Placeholder, spec)
+    (spliceSql(sqlText, value), name)
   }
-
-  /** Compile one field's transformation over an input value column
-    * (name-less convenience over [[compileField]]). */
-  def compileValue(value: Column, spec: FieldSpec): Column =
-    compileField(value, spec)._1
 
   /** MAPPED stage: RECID + one compiled column per single-value field. */
   def mapped(raw: DataFrame, schema: Seq[FieldSpec]): DataFrame = {
     val cols = col(RecId) +: schema.filter(_.parseSv).map { sp =>
-      val (c, name) = compileField(recordInput(sp), sp)
+      val (c, name) = compileField(expr(recordInputSql(sp)), sp)
       c.as(name)
     }
     raw.select(cols: _*)
@@ -262,44 +202,19 @@ object SchemaConverter {
     // never duplicated across field extractions.
     val DecTmp = "__FEFD"
     val withDec = raw.withColumn(DecTmp,
-      org.apache.spark.sql.GraftBridge.column(
-        graft.plans.MvDecode(
-          org.apache.spark.sql.GraftBridge.expression(col(Blob)))))
+      GraftBridge.column(graft.plans.MvDecode(GraftBridge.expression(col(Blob)))))
     def elemsAt(i: Int) = try_element_at(col(DecTmp), lit(i + 1))
     // a single-value field is the FD-join of its elements (identity
     // when the field never contained an FD marker)
     def fieldAt(i: Int) = array_join(elemsAt(i), FdSep)
-    val posed = schema.zipWithIndex
-    val svs = posed.filter(_._1.parseSv)
-    val vms = posed.filter(_._1.parseVm)
-    val vss = posed.filter(_._1.parseVs)
-    if (vms.isEmpty && vss.isEmpty) {
-      withDec.select(col(RecId) +: svs.map { case (sp, i) =>
-        val (c, n) = compileField(fieldAt(i), sp); c.as(n)
+    if (!schema.exists(sp => sp.parseVm || sp.parseVs)) {
+      withDec.select(col(RecId) +: schema.zipWithIndex.filter(_._1.parseSv).map {
+        case (sp, i) => val (c, n) = compileField(fieldAt(i), sp); c.as(n)
       }: _*)
-    } else {
-      val arrays = (vms ++ vss).map { case (sp, i) =>
-        elemsAt(i).as(outputName(sp))
-      }
-      val svPairs = svs.map { case (sp, i) => compileField(fieldAt(i), sp) }
-      val zipped = withDec.select((col(RecId) +: svPairs.map { case (c, n) => c.as(n) }) :+
-        posexplode_outer(arrays_zip(arrays: _*)).as(Seq("pos", "mv")): _*)
-      val vmCols = vms.map { case (sp, _) =>
-        val (c, n) = compileField(col("mv").getField(outputName(sp)), sp)
-        c.as(n)
-      }
-      val vsCols = vss.map { case (sp, _) =>
-        transform(
-          org.apache.spark.sql.GraftBridge.column(graft.plans.SplitChar(
-            org.apache.spark.sql.GraftBridge.expression(
-              col("mv").getField(outputName(sp))), FcSep)),
-          e => compileField(e, sp)._1
-        ).as(outputName(sp) + "_VS")
-      }
-      zipped.select(
-        (col(RecId) +: svPairs.map(p => col(p._2))) ++
-          Seq((col("pos") + 1).as(MvPos)) ++ vmCols ++ vsCols: _*)
-    }
+    } else exploded(withDec, schema,
+      svInput = (_, i) => fieldAt(i),
+      arrayOf = (_, i) => elemsAt(i),
+      vsSplit = in => GraftBridge.column(graft.plans.SplitChar(GraftBridge.expression(in), FcSep)))
   }
 
   /** MULTIVALUE stage: decode every VM field to its element array, zip
@@ -312,29 +227,41 @@ object SchemaConverter {
     * (subvalue) fields decode a second level within each element and
     * transform per subvalue.
     */
-  def multivalue(raw: DataFrame, schema: Seq[FieldSpec]): DataFrame = {
-    val svs = schema.filter(_.parseSv)
-    val vms = schema.filter(_.parseVm)
-    val vss = schema.filter(_.parseVs)
-    require(vms.nonEmpty || vss.nonEmpty, "multivalue stage needs a VM/VS field")
+  def multivalue(raw: DataFrame, schema: Seq[FieldSpec]): DataFrame =
+    exploded(raw, schema,
+      svInput = (sp, _) => expr(recordInputSql(sp)),
+      arrayOf = (sp, _) =>
+        T24.mvSplit(coalesce(col(Record)(sp.name + "_multivalue"), col(Record)(sp.name))),
+      vsSplit = T24.mvSplit)
 
-    val arrays = (vms ++ vss).map { sp =>
-      T24.mvSplit(coalesce(col(Record)(sp.name + "_multivalue"), col(Record)(sp.name)))
-        .as(outputName(sp))
-    }
-    val svPairs = svs.map(sp => compileField(recordInput(sp), sp))
-    val zipped = raw.select(
+  /** Shared Column shape of the exploded stages ([[multivalue]] and the
+    * FEFD branch of [[blobFe]]), the Column twin of [[explodedSql]]: one
+    * element array per VM/VS field (aliased to the output name, which
+    * names the ARRAYS_ZIP struct field), the positional zip-explode, then
+    * the per-element transform chains. The callbacks receive each field
+    * with its schema position (the packed-blob layout is positional). */
+  private def exploded(src: DataFrame, schema: Seq[FieldSpec],
+                       svInput: (FieldSpec, Int) => Column,
+                       arrayOf: (FieldSpec, Int) => Column,
+                       vsSplit: Column => Column): DataFrame = {
+    val posed = schema.zipWithIndex
+    val svs = posed.filter(_._1.parseSv)
+    val vms = posed.filter(_._1.parseVm)
+    val vss = posed.filter(_._1.parseVs)
+    require(vms.nonEmpty || vss.nonEmpty, "multivalue stage needs a VM/VS field")
+    val arrays = (vms ++ vss).map { case (sp, i) => arrayOf(sp, i).as(outputName(sp)) }
+    val svPairs = svs.map { case (sp, i) => compileField(svInput(sp, i), sp) }
+    val zipped = src.select(
       (col(RecId) +: svPairs.map { case (c, n) => c.as(n) }) :+
         posexplode_outer(arrays_zip(arrays: _*)).as(Seq("pos", "mv")): _*)
-
     // per-element transformations (reference multiParser :172-290)
-    val vmCols = vms.map { sp =>
+    val vmCols = vms.map { case (sp, _) =>
       val (c, n) = compileField(col("mv").getField(outputName(sp)), sp)
       c.as(n)
     }
     // VS fields: second-level decode, then per-subvalue transforms
-    val vsCols = vss.map { sp =>
-      transform(T24.mvSplit(col("mv").getField(outputName(sp))),
+    val vsCols = vss.map { case (sp, _) =>
+      transform(vsSplit(col("mv").getField(outputName(sp))),
         e => compileField(e, sp)._1).as(outputName(sp) + "_VS")
     }
     zipped.select(
@@ -352,15 +279,17 @@ object SchemaConverter {
 
   // ---- SQL text emission (parity with the reference's generated stmts) ----
   // Emits the KSQL-shaped function names (PARSE_DATE, SEAB_FIELD, …);
-  // Engine.registerFunctions makes them resolvable by spark.sql, so the
-  // emitted statements run with the same native expressions as the
-  // Column path.
+  // Engine.registerFunctions makes them resolvable by spark.sql, and
+  // compileField expands them while parsing — both through the same
+  // Engine.functionBuilders, so both paths run the same expressions.
 
-  /** SQL text + output name of one field's full transform chain —
-    * mirror of [[compileField]]. */
-  def sqlField(input: String, spec: FieldSpec,
-               recIdSql: String = RecId): (String, String) = {
+  /** SQL text + output name of one field's full transform chain — the
+    * one transformation dispatch: transformation → optional `nested`
+    * wrap → TRY_CAST to the target type. [[compileField]] parses it. */
+  def sqlField(input: String, spec: FieldSpec): (String, String) = {
     val defaultName = outputName(spec)
+    // the INPUTTER_HIS field NAME forces the audit transform regardless
+    // of its transformation (reference :70-72)
     val (body, name) = if (spec.name == "INPUTTER_HIS")
       (s"INPUTTER_HIS($input)", "INPUTTER_HIS")
     else spec.transformation match {
@@ -375,7 +304,11 @@ object SchemaConverter {
       case IndexT(n)         => (s"MV_INDEX($input, ${n.toInt})", defaultName)
       case TemplateT(fn, args, alias) =>
         val outName = if (alias.nonEmpty) alias.toUpperCase else defaultName
-        val in = if (spec.name == RecId) recIdSql else input
+        // RECID as template input maps to the record key, not the map
+        // (reference :104-105)
+        val in = if (spec.name == RecId) RecId else input
+        // `$$` splices the field NAME into the template text
+        // (reference :110-111; exclusive with `$`)
         if (args.contains("$$"))
           (s"${fn.toUpperCase}(${args.replace("$$", spec.name)})", outName)
         else if (args.contains("$"))
@@ -385,9 +318,12 @@ object SchemaConverter {
             val params =
               if (extra.exists(c => c != ',' && !c.isWhitespace)) extra
               else inferredParams(spec.transformation)
-            (s"${fn.toUpperCase}(${elemSql(in, n)}$params)", outName)
+            (s"${fn.toUpperCase}(MV_INDEX($in, $n)$params)", outName)
+          // template body without `$` or `[n]`: raw passthrough
           case _ => (spec.transformation, outName)
         }
+      // unrecognized transformation: raw-expression passthrough,
+      // emitted verbatim (reference :145-146)
       case other => (other, defaultName)
     }
     val (wrapped, name2) =
@@ -397,6 +333,8 @@ object SchemaConverter {
             if (alias2.nonEmpty) alias2.toUpperCase else name)
         case _ => (body, name)
       } else (body, name)
+    // TRY_CAST: a malformed value nulls the field, never the pipeline
+    // (KSQL semantics; ANSI cast would fail the job on one bad record)
     val cast =
       if (spec.dataType == "string") wrapped
       else s"TRY_CAST($wrapped AS ${spec.dataType})"
@@ -450,36 +388,35 @@ object SchemaConverter {
     * (names feed ARRAYS_ZIP's struct-field naming — the same mechanism
     * as the Column stage's `.as(...)` aliases), LATERAL VIEW OUTER
     * POSEXPLODE zips and explodes them positionally, and the outer
-    * select runs the per-element transform dispatch. `innerExtra`
-    * prepends derived columns the arrays themselves need (the
-    * packed-blob decode). */
+    * select runs the per-element transform dispatch. Like [[exploded]],
+    * the callbacks receive each field with its schema position. */
   private def explodedSql(schema: Seq[FieldSpec], source: String,
                           templateName: String,
-                          svInput: FieldSpec => String,
-                          arrayOf: FieldSpec => String,
-                          vsSplit: String => String,
-                          innerExtra: Seq[String]): String = {
-    val svs = schema.filter(_.parseSv)
-    val vms = schema.filter(_.parseVm)
-    val vss = schema.filter(_.parseVs)
+                          svInput: (FieldSpec, Int) => String,
+                          arrayOf: (FieldSpec, Int) => String,
+                          vsSplit: String => String): String = {
+    val posed = schema.zipWithIndex
+    val svs = posed.filter(_._1.parseSv)
+    val vms = posed.filter(_._1.parseVm)
+    val vss = posed.filter(_._1.parseVs)
     require(vms.nonEmpty || vss.nonEmpty, "multivalue statement needs a VM/VS field")
-    val arrays = (vms ++ vss).map { sp =>
-      s"${arrayOf(sp)} AS $ArrPrefix${outputName(sp)}"
+    val arrays = (vms ++ vss).map { case (sp, i) =>
+      s"${arrayOf(sp, i)} AS $ArrPrefix${outputName(sp)}"
     }
-    val inner = (Seq("*") ++ innerExtra ++ arrays).mkString(",\n    ")
-    val zipArgs = (vms ++ vss).map(sp => s"$ArrPrefix${outputName(sp)}").mkString(", ")
+    val inner = ("*" +: arrays).mkString(",\n    ")
+    val zipArgs = (vms ++ vss).map { case (sp, _) => s"$ArrPrefix${outputName(sp)}" }.mkString(", ")
     val exploded =
       s"""(SELECT $inner\n  FROM $source) __graft_src
          |LATERAL VIEW OUTER POSEXPLODE(ARRAYS_ZIP($zipArgs)) __graft_mv AS pos, mv""".stripMargin
-    val svFields = svs.map { sp =>
-      val (sql, name) = sqlField(svInput(sp), sp)
+    val svFields = svs.map { case (sp, i) =>
+      val (sql, name) = sqlField(svInput(sp, i), sp)
       s"  $sql AS $name"
     }
-    val vmFields = vms.map { sp =>
+    val vmFields = vms.map { case (sp, _) =>
       val (sql, name) = sqlField(s"mv.$ArrPrefix${outputName(sp)}", sp)
       s"  $sql AS $name"
     }
-    val vsFields = vss.map { sp =>
+    val vsFields = vss.map { case (sp, _) =>
       val (sql, _) = sqlField("__graft_x", sp)
       s"  TRANSFORM(${vsSplit(s"mv.$ArrPrefix${outputName(sp)}")}, " +
         s"__graft_x -> $sql) AS ${outputName(sp)}_VS"
@@ -502,11 +439,10 @@ object SchemaConverter {
     * second-level decode. */
   def multivalueSql(schema: Seq[FieldSpec], source: String): String =
     explodedSql(schema, source, MultivalueTemplateName,
-      svInput = recordInputSql,
-      arrayOf = sp =>
+      svInput = (sp, _) => recordInputSql(sp),
+      arrayOf = (sp, _) =>
         s"MV_SPLIT(COALESCE($Record['${sp.name}_multivalue'], $Record['${sp.name}']))",
-      vsSplit = in => s"MV_SPLIT($in)",
-      innerExtra = Seq.empty)
+      vsSplit = in => s"MV_SPLIT($in)")
 
   /** Spark SQL text of the BLOB_SPLIT MAPPED statement (reference
     * `singleSplitBlobParser`, `controllers/index.js:294-403`): per-field
@@ -540,7 +476,6 @@ object SchemaConverter {
     val posed = schema.zipWithIndex
     def elems(i: Int) = s"TRY_ELEMENT_AT($Dec, ${i + 1})"
     def fieldAt(i: Int) = s"ARRAY_JOIN(${elems(i)}, '$FdSep')"
-    val posOf = posed.map { case (sp, i) => sp.name -> i }.toMap
     if (!schema.exists(sp => sp.parseVm || sp.parseVs)) {
       val fields = posed.filter(_._1.parseSv).map { case (sp, i) =>
         val (sql, name) = sqlField(fieldAt(i), sp)
@@ -553,10 +488,9 @@ object SchemaConverter {
         "sourceStream" -> decoded,
         "schemaName" -> source))
     } else explodedSql(schema, decoded, BlobParseTemplateName,
-      svInput = sp => fieldAt(posOf(sp.name)),
-      arrayOf = sp => elems(posOf(sp.name)),
-      vsSplit = in => s"SPLIT_CHAR($in, '$FcSep')",
-      innerExtra = Seq.empty)
+      svInput = (_, i) => fieldAt(i),
+      arrayOf = (_, i) => elems(i),
+      vsSplit = in => s"SPLIT_CHAR($in, '$FcSep')")
   }
 
   /** CREATE TABLE DDL for the sink — the analog of the reference's

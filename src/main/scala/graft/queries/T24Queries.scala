@@ -53,7 +53,7 @@ object T24Queries {
           concat(lit("1:"), col("p_type"), lit("#2:"), col("p_name"),
             lit("#3:"), col("p_size").cast("string")).as("mv"))
         .transform(Spread.byRange(_, col("p_partkey")))
-        .select(col("p_partkey"), T24.mvIndex(col("mv"), 2).as("item2"))
+        .select(col("p_partkey"), T24.mvIndex(col("mv"), lit(2)).as("item2"))
         .orderBy("p_partkey")
     },
 
@@ -63,7 +63,7 @@ object T24Queries {
           concat(lit("1:"), col("p_type"), lit("#2:"), col("p_name"),
             lit("#s3:"), col("p_size").cast("string")).as("mv"))
         .transform(Spread.byRange(_, col("p_partkey")))
-        .select(col("p_partkey"), T24.mvJoin(col("mv"), "|").as("joined"))
+        .select(col("p_partkey"), T24.mvJoin(col("mv"), lit("|")).as("joined"))
         .orderBy("p_partkey")
     },
 
@@ -71,7 +71,7 @@ object T24Queries {
       table(s, d, "customer")
         .transform(Spread.byRange(_, col("c_custkey")))
         .select(col("c_custkey"),
-          T24.seabField(col("c_name"), "#", 2).as("cust_num"))
+          T24.seabField(col("c_name"), "#", lit(2)).as("cust_num"))
         .orderBy("c_custkey")
     },
 

@@ -450,6 +450,13 @@ object MergeTable {
     }
   }
 
+  /** File basenames of the distinct `__mt_file` paths in `rows`
+    * (staged names are UUID-unique, so a set lookup matches entries
+    * without a suffix scan per file). */
+  private def baseNames(rows: DataFrame): Set[String] =
+    rows.select("__mt_file").distinct().collect()
+      .map { r => val p = r.getString(0); p.substring(p.lastIndexOf('/') + 1) }.toSet
+
   /** Per-file [min, max] of `c` by reading the files back: one scan
     * grouped by `_metadata.file_path`, so data-sized work stays in
     * executors and only #files stat rows reach the driver. */
@@ -936,11 +943,9 @@ object MergeTable {
       case _ =>
         val base = fromEntries(spark, dir, StructType.fromDDL(m.ddl),
           m.entries, m.statsCol, withFileCol = true)
-        val hitPaths = base
-          .join(keys.select(col(key)).distinct(), Seq(key))
-          .select("__mt_file").distinct()
-          .collect().map(_.getString(0)).toSet
-        m.entries.filter(e => hitPaths.exists(_.endsWith("/" + e.name)))
+        val hitNames = baseNames(base
+          .join(keys.select(col(key)).distinct(), Seq(key)))
+        m.entries.filter(e => hitNames(e.name))
     }
 
 
@@ -1150,11 +1155,8 @@ object MergeTable {
       val hitCond = coalesce(cond, lit(false))
       val base = fromEntries(spark, dir, schema, m.entries, m.statsCol,
         withFileCol = true)
-      val hitPaths = base.filter(hitCond)
-        .select("__mt_file").distinct()
-        .collect().map(_.getString(0)).toSet
-      val hits = m.entries.filter(e => hitPaths.exists(_.endsWith("/" + e.name)))
-      val hitNames = hits.map(_.name).toSet
+      val hitNames = baseNames(base.filter(hitCond))
+      val hits = m.entries.filter(e => hitNames(e.name))
       val next =
         if (hits.isEmpty) m.entries
         else {

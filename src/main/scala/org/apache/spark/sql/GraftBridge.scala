@@ -10,7 +10,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
-  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** The Column's Catalyst tree, converted now: `ExpressionUtils`
+    * defers a non-expression node behind a wrapper only a Dataset
+    * resolves, which a function-registry builder's result never meets. */
+  def expression(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
 
   private val formatters =
     new java.util.concurrent.ConcurrentHashMap[(String, String),

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The reference's `/api/execute` surface: users submit KSQL-shaped SQL
   * text. After `Engine.registerFunctions`, those statements parse and
   * run through `spark.sql`, resolving to the same native expressions as
-  * the Column API. */
+  * the Column API (both build from `graft.functions.T24`). */
 class EngineSqlSpec extends AnyFunSuite {
   import SparkTest._
   Engine.registerFunctions(spark)
@@ -29,6 +29,47 @@ class EngineSqlSpec extends AnyFunSuite {
     assert(one("SELECT PARSE_DATE('not-a-date')") == null)
     assert(one("SELECT SEAB_FIELD('nodash', '_', 2)") == null)
     assert(one("SELECT MV_INDEX('1:a', 9)") == null)
+  }
+
+  test("T24 multivalue functions resolve to the native splits, not a regex split") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    Seq("1:SYS_A#2:SYS_B").toDF("v").createOrReplaceTempView("engine_sql_native")
+    Seq("MV_SPLIT(v)", "MV_INDEX(v, 2)", "MV_JOIN(v, '|')", "SEAB_FIELD(v, '_', 2)",
+        "INPUTTER_HIS(v)").foreach { call =>
+      val exprs = spark.sql(s"SELECT $call FROM engine_sql_native")
+        .queryExecution.analyzed.expressions.flatMap(_.collect { case e => e })
+      assert(exprs.exists {
+        case _: graft.plans.MvMarkerSplit | _: graft.plans.SplitChar => true
+        case _ => false
+      }, s"$call must resolve to MvMarkerSplit or SplitChar")
+      val regexes = exprs.collect { case sp: StringSplit => sp.regex.eval().toString }
+      assert(!regexes.contains(graft.functions.T24.MvMarker),
+        s"$call must not regex-split on the multivalue marker: $regexes")
+      // INPUTTER_HIS keeps its own audit split (T24.inputterHis keeps
+      // empty elements, which the marker decode drops); nothing else
+      // may regex-split at all
+      if (!call.startsWith("INPUTTER_HIS"))
+        assert(regexes.isEmpty, s"$call must not regex-split: $regexes")
+    }
+  }
+
+  test("every argument form keeps its result; an empty SEAB_FIELD delimiter is named") {
+    import spark.implicits._
+    Seq(("1:a#2:b#3:c", 2, "|", "x_y_z")).toDF("mv", "n", "d", "s")
+      .createOrReplaceTempView("engine_sql_args")
+    val r = spark.sql(
+      """SELECT MV_INDEX(mv, n), SEAB_FIELD(s, '_', n), MV_JOIN(mv, d), MV_JOIN(mv)
+        |FROM engine_sql_args""".stripMargin).head()
+    assert(r.getString(0) == "b", "non-literal MV_INDEX index")
+    assert(r.getString(1) == "y", "non-literal SEAB_FIELD index")
+    assert(r.getString(2) == "a|b|c", "non-literal MV_JOIN delimiter")
+    assert(r.getString(3) == "a b c", "default MV_JOIN delimiter")
+    val e = intercept[Exception](
+      spark.sql("SELECT SEAB_FIELD(s, '', 2) FROM engine_sql_args").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("seab_field delim")),
+      s"the error must name the argument: $e")
   }
 
   test("GraftExtensions injects the full function surface") {
@@ -172,14 +213,17 @@ class EngineSqlSpec extends AnyFunSuite {
     import spark.implicits._
     val blob = hexOf("S1") + "FE" +
       hexOf("20240131") + "FD" + hexOf("20240301") + "FE" +
-      hexOf("a") + "FC" + hexOf("b") // FD-multivalue + FC-subvalue field
+      hexOf("a") + "FC" + hexOf("b") + // FD-multivalue + FC-subvalue field
+      "FE" + hexOf("T2")
     val raw = Seq(("1", blob))
       .toDF(SchemaConverter.RecId, SchemaConverter.Blob)
     val sch = Seq(
       FieldSpec("STATUS"),
       FieldSpec("DTS", dataType = "date", transformation = "parse_date",
         parseSv = false, parseVm = true),
-      FieldSpec("SUBS", parseSv = false, parseVs = true))
+      FieldSpec("SUBS", parseSv = false, parseVs = true),
+      // a repeated name still reads its own position
+      FieldSpec("STATUS", transformation = "LOWER($) STATUS2"))
     raw.createOrReplaceTempView("proc_blob_fefd_raw")
     assertTextEqualsDsl(
       SchemaConverter.blobFeSql(sch, "proc_blob_fefd_raw"),

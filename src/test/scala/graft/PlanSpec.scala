@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-quality gate: the properties that make these queries scale are
@@ -13,21 +16,37 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, sf).queryExecution
       .explainString(FormattedMode)
 
-  /** The detail blocks of every Exchange operator in a formatted plan
-    * (heading "(n) Exchange" through the next blank line) — the Input
-    * line inside lists exactly the columns that cross that shuffle. */
-  private def exchangeBlocks(p: String): Seq[String] = {
-    val lines = p.linesIterator.toVector
-    val starts = lines.zipWithIndex.collect {
-      case (l, i) if l.matches("""\(\d+\) Exchange.*""") => i
+  /** Every exchange of a query's FINAL executed plan: the query runs,
+    * so AQE has settled its stages, and the walk descends into query
+    * stages, reused exchanges and subqueries. */
+  private def finalExchanges(name: String): Seq[Exchange] = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.collect()
+    def walk(p: SparkPlan): Seq[Exchange] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => walk(r.child)
+      case e: Exchange => e +: walk(e.child)
+      case o => (o.children ++ o.subqueries).flatMap(walk)
     }
-    starts.map { i =>
-      val end = lines.indexWhere(_.trim.isEmpty, i) match {
-        case -1 => lines.length
-        case e  => e
-      }
-      lines.slice(i, end).mkString("\n")
-    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** Whether a type carries binary data at any nesting depth. */
+  private def hasBinary(t: DataType): Boolean = t match {
+    case BinaryType => true
+    case a: ArrayType => hasBinary(a.elementType)
+    case m: MapType => hasBinary(m.keyType) || hasBinary(m.valueType)
+    case st: StructType => st.fields.exists(f => hasBinary(f.dataType))
+    case _ => false
+  }
+
+  /** The binary attributes in the child output of each exchange of a
+    * query's final plan — the payload columns that cross a shuffle. */
+  private def binaryAcrossShuffles(name: String): Seq[String] = {
+    val exchanges = finalExchanges(name)
+    assert(exchanges.nonEmpty, s"$name: expected the spread + stats exchanges")
+    exchanges.flatMap(_.child.output.filter(a => hasBinary(a.dataType)).map(_.toString))
   }
 
   test("q6: filters and projection reach the parquet scan") {
@@ -739,17 +758,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("m16: resample is per-partition decode — payloads never cross a shuffle") {
-    val p = plan("m16_audio_resample")
     // exchanges exist (the key-scan spread before the decode and the
     // narrow stats re-key that pins the decode to ONE run under the
     // final sort's range-sampling pass), but they may only ever carry
     // the 8-byte key or the decoded STATS row — never the WAV payload
-    val blocks = exchangeBlocks(p)
-    assert(blocks.nonEmpty, "expected the spread + stats exchanges")
-    blocks.foreach { b =>
-      assert(!b.contains("payload") && !b.contains("_2#") && !b.contains("wav"),
-        s"decoded audio payloads must never cross a shuffle: $b")
-    }
+    val leaked = binaryAcrossShuffles("m16_audio_resample")
+    assert(leaked.isEmpty, s"decoded audio payloads must never cross a shuffle: $leaked")
   }
 
   test("d58: tertile thresholds broadcast over the in-row score chain") {
@@ -800,13 +814,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("m17: VAD is per-partition decode — payloads never cross a shuffle") {
-    val p = plan("m17_vad")
-    val blocks = exchangeBlocks(p)
-    assert(blocks.nonEmpty, "expected the spread + stats exchanges")
-    blocks.foreach { b =>
-      assert(!b.contains("payload") && !b.contains("_2#") && !b.contains("wav"),
-        s"decoded audio payloads must never cross a shuffle: $b")
-    }
+    val leaked = binaryAcrossShuffles("m17_vad")
+    assert(leaked.isEmpty, s"decoded audio payloads must never cross a shuffle: $leaked")
   }
 
   test("q62: the runtime bloom filter prunes the fact scan before the shuffle") {

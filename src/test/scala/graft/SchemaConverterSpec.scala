@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.T24
 import graft.operators.{FieldSpec, SchemaConverter}
 
 class SchemaConverterSpec extends AnyFunSuite {
   import SparkTest._
-  // templates and the SQL emission path resolve the KSQL function
-  // surface (PARSE_DATE, SEAB_FIELD, …) from the session registry
+  // the SQL emission path resolves the KSQL function surface
+  // (PARSE_DATE, SEAB_FIELD, …) from the session registry
   graft.Engine.registerFunctions(spark)
 
   private def raw = {
@@ -187,6 +188,48 @@ class SchemaConverterSpec extends AnyFunSuite {
     val out = SchemaConverter.mapped(r, Seq(FieldSpec("INPUTTER_HIS")))
     assert(out.columns.toSeq == Seq("RECID", "INPUTTER_HIS"))
     assert(out.head.getString(1) == "AGENT9 TELLER9")
+  }
+
+  test("compileField resolves every built-in transformation to its direct T24 composition") {
+    import spark.implicits._
+    val src = Seq("1:SYS_A#2:SYS_B").toDF("v")
+    val v = col("v")
+    def resolved(c: org.apache.spark.sql.Column) =
+      src.select(c).queryExecution.analyzed.expressions.head match {
+        case a: org.apache.spark.sql.catalyst.expressions.Alias => a.child
+        case e => e
+      }
+    val direct = Seq(
+      ""                 -> v,
+      "parse_date"       -> T24.parseDate(v),
+      "parse_timestamp"  -> T24.parseTimestamp(v),
+      "substring"        -> T24.substr35(v),
+      "seab_field"       -> T24.seabField(v, "_", lit(2)),
+      "inputter_his"     -> T24.inputterHis(v),
+      "string-join"      -> T24.mvJoin(v, lit(" ")),
+      "string-join('d')" -> T24.mvJoin(v, lit("d")),
+      "[2]"              -> T24.mvIndex(v, lit(2)))
+    val wraps = Seq[(String, String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+      ("string", "", c => c),
+      ("timestamp", "", c => c.try_cast("timestamp")),
+      ("decimal(18,2)", "CONCAT($, '-') W", c => concat(c, lit("-")).try_cast("decimal(18,2)")))
+    for ((t, expected) <- direct; (dataType, nested, wrap) <- wraps) {
+      val spec = FieldSpec("F", dataType = dataType, transformation = t, nested = nested)
+      val got = resolved(SchemaConverter.compileField(v, spec)._1)
+      val want = resolved(wrap(expected))
+      assert(got.semanticEquals(want), s"$spec:\n$got\nvs\n$want")
+    }
+  }
+
+  test("engine functions in templates resolve without session registration") {
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val r = Seq(("1", Map("P" -> "A_B_C")))
+      .toDF(SchemaConverter.RecId, SchemaConverter.Record)
+    val out = SchemaConverter.mapped(r,
+      Seq(FieldSpec("P", transformation = "SEAB_FIELD($,'_',2) P2")))
+    assert(out.columns.toSeq == Seq("RECID", "P2"))
+    assert(out.head.getString(1) == "B")
   }
 
   test("blobFe splits a packed FE-delimited hex record positionally") {

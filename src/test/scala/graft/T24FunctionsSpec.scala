@@ -23,20 +23,20 @@ class T24FunctionsSpec extends AnyFunSuite {
   }
 
   test("mvIndex is 1-based and null out of range") {
-    assert(one(T24.mvIndex(lit("1:a#2:b"), 2)).getString(0) == "b")
-    assert(one(T24.mvIndex(lit("1:a#2:b"), 3)).isNullAt(0))
+    assert(one(T24.mvIndex(lit("1:a#2:b"), lit(2))).getString(0) == "b")
+    assert(one(T24.mvIndex(lit("1:a#2:b"), lit(3))).isNullAt(0))
   }
 
   test("mvJoin strips markers including the leading one") {
-    assert(one(T24.mvJoin(lit("s1:x#s2:y#3:z"), "|")).getString(0) == "x|y|z")
-    assert(one(T24.mvJoin(lit("plain"), "|")).getString(0) == "plain")
+    assert(one(T24.mvJoin(lit("s1:x#s2:y#3:z"), lit("|"))).getString(0) == "x|y|z")
+    assert(one(T24.mvJoin(lit("plain"), lit("|"))).getString(0) == "plain")
   }
 
   test("seabField returns null when the component is missing") {
-    assert(one(T24.seabField(lit("A_B_C"), "_", 2)).getString(0) == "B")
-    assert(one(T24.seabField(lit("A"), "_", 2)).isNullAt(0))
+    assert(one(T24.seabField(lit("A_B_C"), "_", lit(2))).getString(0) == "B")
+    assert(one(T24.seabField(lit("A"), "_", lit(2))).isNullAt(0))
     // delimiter is literal, not regex (Pattern.quote)
-    assert(one(T24.seabField(lit("a.b.c"), ".", 2)).getString(0) == "b")
+    assert(one(T24.seabField(lit("a.b.c"), ".", lit(2))).getString(0) == "b")
   }
 
   test("hexToText inverts hex() for unicode text") {
