@@ -1,18 +1,33 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions.{decode, lit, unhex}
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.T24
 
-/** Session-level runtime configuration applied idempotently at the head
-  * of every engine entry point. The driver owns SparkSession creation
+/** Runtime configuration applied idempotently at the head of every
+  * engine entry point. The driver owns SparkSession creation
   * (Verify/Bench), so anything the engine needs beyond defaults is set
   * here at runtime rather than at builder time.
+  *
+  * Besides session settings, [[configure]] installs two JVM-level ones,
+  * and they must run first: before the session's first `spark.conf` call
+  * (which builds Spark's shared state and, with it, the cached `file:`
+  * FileSystem) and before its first plan (which initializes Spark's
+  * codegen cache). Neither adds a conf, env var or parameter, and a value
+  * the deployment set explicitly always wins:
+  *  - [[LocalFiles.install]]: a local file system that forks no process
+  *    per file operation;
+  *  - [[CodegenCacheEntries]]: a codegen cache that holds a unit's classes.
   */
 object Engine {
   def configure(spark: SparkSession): SparkSession = {
+    LocalFiles.install(spark.sparkContext.hadoopConfiguration)
+    sizeCodegenCache(spark.sparkContext.getConf)
     // events.parquet carries INT64 TIMESTAMP(NANOS) which Spark refuses
     // by default; read as Long (ns since epoch) and convert explicitly.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -20,6 +35,41 @@ object Engine {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     registerFunctions(spark)
     spark
+  }
+
+  /** Entries of Spark's generated-class cache, one LRU cache per JVM
+    * whose default of 100 is smaller than one unit of graft's work: a
+    * `batch_mix` pass of the graftbench benchmark uses 150-200 distinct
+    * classes and a `cdc_hot` epoch about 125, so at 100 a class is
+    * evicted before its next use and recompiled (1.6 s of compiles per
+    * `batch_mix` pass, 4 cores). Measured per pass: 150 entries still
+    * compiled 452 ms; 200, 300 and 1000 compiled 0 ms, and 1000 left the
+    * run's peak RSS unchanged. 1000 leaves room for a JVM that serves
+    * several such workloads. */
+  val CodegenCacheEntries = 1000
+
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** The cache size to install, or None when the deployment set its
+    * own in the SparkConf. */
+  private[graft] def codegenCacheEntries(conf: SparkConf): Option[Int] =
+    if (conf.contains(CodegenCacheKey)) None else Some(CodegenCacheEntries)
+
+  private var codegenCacheDecided = false
+
+  /** Once per JVM: Spark sizes the cache from `SQLConf.get` when
+    * `CodeGenerator` initializes, so initialize it here under a conf
+    * that carries the size. A JVM that compiled code before its first
+    * [[configure]] keeps the size it started with (Spark's 100). */
+  private def sizeCodegenCache(conf: SparkConf): Unit = synchronized {
+    if (!codegenCacheDecided) {
+      codegenCacheDecided = true
+      codegenCacheEntries(conf).foreach { n =>
+        val sized = new SQLConf
+        sized.setConfString(CodegenCacheKey, n.toString)
+        SQLConf.withExistingConf(sized)(CodeGenerator.compileTime)
+      }
+    }
   }
 
   /** The engine's SQL function surface by name — shared by

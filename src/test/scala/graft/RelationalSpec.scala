@@ -4,12 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTest {
-  lazy val spark: SparkSession = SparkSession.builder()
+  /** Configured as it is created, so the forked test JVM's first plan and
+    * first local file already see the engine's JVM-level settings,
+    * whichever suite runs first. */
+  lazy val spark: SparkSession = Engine.configure(SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    .getOrCreate())
   val sf = "/root/testdata/sf0.001"
 }
 
