@@ -6,7 +6,9 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -42,7 +44,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    contract provides it, e.g. HDFS; object stores need an external
   *    commit service, exactly as the public formats document). A lost
   *    race raises [[VersionConflictException]] and every mutator
-  *    ([[merge]]/[[deleteKeys]]/[[deleteWhere]]/[[optimize]]) RETRIES
+  *    (all of them commit through one step, [[commit]]) RETRIES
   *    FROM THE NEW LATEST (bounded attempts) — so a CDC apply sink
   *    survives a racing `optimize` maintainer instead of crashing the
   *    stream, and a racing `vacuum` is safe through its RETENTION
@@ -60,12 +62,15 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    hits, only the (conservative, always-correct) candidate files
   *    are opened. A key outside every file's range touches NOTHING.
   *    The probe is an EQUI-join on a computed bin column (the file
-  *    ranges rasterize onto fixed-width bins driver-side, metadata
-  *    scale), not a per-key linear scan of all ranges — at 1M files ×
-  *    1M keys a theta join would plan 10^12 comparisons; the binned
-  *    probe hashes each key to its bin and compares only the files
-  *    overlapping that bin. Degenerate key spans (wider than 2^62)
-  *    fall back to the always-correct theta join.
+  *    ranges rasterize onto power-of-two-wide bins driver-side,
+  *    metadata scale), not a per-key linear scan of all ranges — at
+  *    1M files × 1M keys a theta join would plan 10^12 comparisons;
+  *    the binned probe hashes each key to its bin and compares only
+  *    the files overlapping that bin. A bin is a right shift of an
+  *    order-preserving unsigned image of the key (a LONG with its
+  *    sign bit flipped, a STRING's first 7 UTF-8 bytes), so one probe
+  *    serves both key types and every span up to the whole LONG
+  *    domain.
   *  - SCHEMA EVOLUTION: a merge batch may carry NEW columns (never
   *    drop existing ones — an update row replaces its base row, so a
   *    missing column would be an ambiguous partial update). The
@@ -106,10 +111,11 @@ object MergeTable {
 
   private val OccAttempts = 5
 
-  /** Test seam: invoked once (self-clearing) inside the next mutator
+  /** Test seam: invoked once (self-clearing) inside the next commit
     * attempt AFTER it resolved its base manifest and staged its files
-    * but BEFORE it publishes — the window where a racing writer's
-    * commit forces the OCC retry. Production value is a no-op. */
+    * but BEFORE it publishes ([[commit]]) — the window where a racing
+    * writer's commit forces the OCC retry. Production value is a
+    * no-op. */
   private[graft] var midCommitHook: () => Unit = () => ()
 
   private val ManifestRe = """manifest-(\d{10})\.txt""".r
@@ -242,8 +248,52 @@ object MergeTable {
   private def unitId(e: Entry): String =
     if (e.dvs.isEmpty) e.name else e.name + "#" + e.dvs.sorted.mkString(",")
 
+  /** The INTACT-GROUP test [[diffEntries]] and [[compact]] share: the
+    * content units each of `entries` stands for. A member of an intact
+    * compaction group — all `size` members present, every one dv-free
+    * and passing `whole` — stands for the group's origins; any other
+    * entry for its own [[unitId]], which always denotes exactly its
+    * visible rows. A deletion vector on any member voids the group's
+    * origin claim (the group no longer holds exactly its origins'
+    * rows). Empty origins never occur (optimize compacts >= 2 files)
+    * but would make the unit set vacuously excludable — guarded. */
+  private def unitsOf(entries: Seq[Entry],
+                      whole: Entry => Boolean = _ => true): Entry => Seq[String] = {
+    val byGid = entries.filter(_.lineage.isDefined).groupBy(_.lineage.get.gid)
+    e => e.lineage match {
+      case Some(l) if l.origins.nonEmpty && byGid(l.gid).size == l.size &&
+          byGid(l.gid).forall(g => g.dvs.isEmpty && whole(g)) =>
+        l.origins
+      case _ => Seq(unitId(e))
+    }
+  }
+
   private case class Manifest(ddl: String, statsCol: Option[String],
                               entries: Seq[Entry])
+
+  /** One resolved version of a table: what every reader and the commit
+    * step start from. */
+  private final case class Head(spark: SparkSession, dir: Path, fs: FileSystem,
+                                v: Int, m: Manifest) {
+    def schema: StructType = StructType.fromDDL(m.ddl)
+    /** The visible rows of `es` under `schema` ([[fromEntries]]). */
+    def rows(es: Seq[Entry], schema: StructType = this.schema,
+             withFileCol: Boolean = false): DataFrame =
+      fromEntries(spark, dir, schema, es, m.statsCol, withFileCol)
+    def len(e: Entry): Long = fs.getFileStatus(new Path(dir, e.name)).getLen
+  }
+
+  /** The one manifest lookup: the latest version, or an explicit
+    * retained `version`. */
+  private def head(spark: SparkSession, path: String, version: Int = -1): Head = {
+    val dir = new Path(path)
+    val fs = fsFor(spark, dir)
+    val vs = versions(fs, dir)
+    require(vs.nonEmpty, s"no MergeTable at $path")
+    val v = if (version >= 0) version else vs.last
+    require(vs.contains(v), s"version $v not present (have ${vs.mkString(",")})")
+    Head(spark, dir, fs, v, readManifest(fs, dir, v))
+  }
 
   private def fsFor(spark: SparkSession, dir: Path): FileSystem =
     dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -321,37 +371,45 @@ object MergeTable {
         s"version $v already published (concurrent writer) — retrying from latest")
   }
 
-  /** Bounded optimistic-concurrency loop: `body` resolves the latest
-    * manifest itself, so each retry re-derives against the winner's
-    * version. Staged files of a lost attempt are unreferenced debris
-    * (vacuum collects); re-running the body is safe because mutations
-    * are deterministic in (base manifest, arguments). */
-  private def withOccRetry[T](what: String)(body: => T): T = {
+  /** The ONE commit step every mutator runs, in a bounded
+    * optimistic-concurrency loop: resolve the latest manifest, let
+    * `next` derive its successor (`Left(r)`: commit nothing and return
+    * `r`), fire [[midCommitHook]], publish the successor as the next
+    * version and return that version. A lost race re-runs `next`
+    * against the winner's version; the loser's staged files are
+    * unreferenced debris (vacuum collects). Re-running is safe because
+    * mutations are deterministic in (base manifest, arguments). */
+  private def commit(spark: SparkSession, path: String, what: String)(
+      next: Head => Either[Int, Manifest]): Int = {
     var last: VersionConflictException = null
     var i = 0
     try {
       while (i < OccAttempts) {
-        try return body
-        catch { case e: VersionConflictException => last = e; i += 1 }
+        try {
+          val h = head(spark, path)
+          return next(h) match {
+            case Left(r) => r
+            case Right(m) =>
+              // read-then-clear under the lock so concurrent mutators
+              // can never both claim (or tear) one armed hook
+              val hook = this.synchronized {
+                val f = midCommitHook
+                midCommitHook = () => ()
+                f
+              }
+              hook()
+              publish(h.fs, h.dir, h.v + 1, m)
+              h.v + 1
+          }
+        } catch { case e: VersionConflictException => last = e; i += 1 }
       }
     } finally
       // a test-armed hook applies to THIS mutator invocation only —
-      // if the body threw before firing it, clearing here keeps the
+      // if `next` threw before firing it, clearing here keeps the
       // stale hook from detonating inside an unrelated later mutator
       this.synchronized { midCommitHook = () => () }
     throw new java.io.IOException(
       s"$what lost the version race $OccAttempts times", last)
-  }
-
-  private def fireMidCommitHook(): Unit = {
-    // read-then-clear under the lock so concurrent mutators can never
-    // both claim (or tear) one armed hook
-    val hook = this.synchronized {
-      val h = midCommitHook
-      midCommitHook = () => ()
-      h
-    }
-    hook()
   }
 
   /** Write `df` into an invisible `_stage-` dir and rename each part
@@ -379,38 +437,58 @@ object MergeTable {
     * further job: when a stats column is tracked, each staged file's
     * true [min, max] comes from the parquet footer the write just
     * produced ([[fileStats]]), so only footers, never rows, reach the
-    * driver. A part whose stats column is entirely NULL (or which
-    * holds zero rows) carries the impossible range: it can never hold
-    * a probe hit, so range pruning skips it — never an NPE mid-write.
-    * Until a manifest lists them the files are unreferenced (readers
-    * resolve manifests, never glob data files). */
+    * driver. A part whose stats column is entirely NULL carries the
+    * impossible range: it can never hold a probe hit, so range pruning
+    * skips it — never an NPE mid-write. A zero-row part never reaches
+    * a manifest: the write's first task leaves a file even when its
+    * partition is empty (so an empty output keeps its schema), and
+    * such a file is deleted here. Until a manifest lists them the
+    * files are unreferenced (readers resolve manifests, never glob
+    * data files). */
   private def stage(df: DataFrame, dir: Path, fs: FileSystem,
                     statsCol: Option[String]): Seq[Entry] = {
-    val renamed = stageParts(df, dir, fs,
+    val spark = df.sparkSession
+    val (empty, written) = stageParts(df, dir, fs,
       i => s"data-${UUID.randomUUID()}-$i.parquet")
+      .map(n => n -> footerBlocks(spark, new Path(dir, n)))
+      .partition(_._2.forall(_.getRowCount == 0))
+    empty.foreach(f => fs.delete(new Path(dir, f._1), false))
     statsCol match {
-      case None => renamed.map(Entry(_, NoStats))
+      case None => written.map(f => Entry(f._1, NoStats))
       case Some(c) =>
-        val stats = fileStats(df.sparkSession, dir, renamed, c,
-          df.schema(c).dataType == StringType)
-        renamed.map(n => Entry(n, stats(n)))
+        val stats = fileStats(spark, dir, written.map(_._1), c,
+          df.schema(c).dataType == StringType, written.toMap)
+        written.map(f => Entry(f._1, stats(f._1)))
     }
   }
 
   /** Per-file [[Stats]] of column `c` for the data files `names` under
-    * `dir`: from each file's parquet footer ([[footerStats]], driver
-    * metadata reads, no Spark job), falling back to ONE scan grouped by
-    * `_metadata.file_path` ([[scanStats]]) for only the files whose
-    * footer cannot answer. */
+    * `dir`: from each file's parquet footer (`footers` when the caller
+    * already read it, else a driver metadata read — no Spark job),
+    * falling back to ONE scan grouped by `_metadata.file_path`
+    * ([[scanStats]]) for only the files whose footer cannot answer. */
   private[graft] def fileStats(spark: SparkSession, dir: Path, names: Seq[String],
-                               c: String, isStr: Boolean): Map[String, Stats] = {
-    val fromFooter = names.map(n =>
-      n -> footerStats(spark, new Path(dir, n), c, isStr)).toMap
+                               c: String, isStr: Boolean,
+                               footers: Map[String, Seq[BlockMetaData]] = Map.empty)
+      : Map[String, Stats] = {
+    val fromFooter = names.map(n => n -> blockStats(
+      footers.getOrElse(n, footerBlocks(spark, new Path(dir, n))), c, isStr)).toMap
     val unknown = names.filter(fromFooter(_).isEmpty)
     val scanned =
       if (unknown.isEmpty) Map.empty[String, Stats]
       else scanStats(spark, dir, unknown, c, isStr)
     names.map(n => n -> fromFooter(n).getOrElse(scanned(n))).toMap
+  }
+
+  /** A parquet file's row groups, from its footer alone. The read
+    * options come from the session's Hadoop conf: without them the
+    * reader builds its own over a fresh `Configuration`, which
+    * re-parses Hadoop's default resources on every call. */
+  private def footerBlocks(spark: SparkSession, file: Path): Seq[BlockMetaData] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf).build())
+    try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
   }
 
   /** The file's [min, max] of top-level column `c` merged over its row
@@ -423,10 +501,11 @@ object MergeTable {
     * the range — a prefix min, an incremented max — so it adds
     * candidates, never misses one.) */
   private[graft] def footerStats(spark: SparkSession, file: Path, c: String,
-                                 isStr: Boolean): Option[Stats] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val blocks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+                                 isStr: Boolean): Option[Stats] =
+    blockStats(footerBlocks(spark, file), c, isStr)
+
+  private def blockStats(blocks: Seq[BlockMetaData], c: String,
+                         isStr: Boolean): Option[Stats] = {
     val chunks = blocks.filter(_.getRowCount > 0).map { b =>
       b -> b.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(c)))
         .map(_.getStatistics).orNull
@@ -551,13 +630,8 @@ object MergeTable {
 
   /** The latest version's schema at metadata cost (manifest DDL only
     * — no snapshot read, no file index). */
-  def tableSchema(spark: SparkSession, path: String): StructType = {
-    val dir = new Path(path)
-    val fs = fsFor(spark, dir)
-    val vs = versions(fs, dir)
-    require(vs.nonEmpty, s"no MergeTable at $path")
-    StructType.fromDDL(readManifest(fs, dir, vs.last).ddl)
-  }
+  def tableSchema(spark: SparkSession, path: String): StructType =
+    head(spark, path).schema
 
   /** Latest version number, or -1 if the table does not exist. */
   def latestVersion(spark: SparkSession, path: String): Int = {
@@ -579,14 +653,8 @@ object MergeTable {
     * — an empty version still answers with the right columns, and a
     * pre-evolution version answers with ITS schema. */
   def read(spark: SparkSession, path: String, version: Int = -1): DataFrame = {
-    val dir = new Path(path)
-    val fs = fsFor(spark, dir)
-    val vs = versions(fs, dir)
-    require(vs.nonEmpty, s"no MergeTable at $path")
-    val v = if (version >= 0) version else vs.last
-    require(vs.contains(v), s"version $v not present (have ${vs.mkString(",")})")
-    val m = readManifest(fs, dir, v)
-    fromEntries(spark, dir, StructType.fromDDL(m.ddl), m.entries, m.statsCol)
+    val h = head(spark, path, version)
+    h.rows(h.m.entries)
   }
 
   /** TIME TRAVEL BY TIMESTAMP: the newest retained version whose
@@ -618,21 +686,27 @@ object MergeTable {
     * cannot intersect [lo, hi] are never OPENED (manifest-level
     * skipping on top of parquet's own row-group stats); the residual
     * filter applies to the candidates. */
-  def readRange(spark: SparkSession, path: String, lo: Long, hi: Long): DataFrame = {
-    val dir = new Path(path)
-    val fs = fsFor(spark, dir)
-    val m = readManifest(fs, dir, versions(fs, dir).last)
-    val c = m.statsCol.getOrElse(
+  def readRange(spark: SparkSession, path: String, lo: Long, hi: Long): DataFrame =
+    overlapRead(spark, path, "tracks STRING stats — use a string range",
+      { case LongRange(a, b) => a <= hi && b >= lo },
+      c => c >= lo && c <= hi)
+
+  /** The latest snapshot restricted to the files whose tracked range
+    * `overlaps` (files without stats stay — no metadata to skip on;
+    * empty ranges never do), then the exact `residual` on the tracked
+    * column. A range of the other key type is `wrongType`. */
+  private def overlapRead(spark: SparkSession, path: String, wrongType: String,
+                          overlaps: PartialFunction[Stats, Boolean],
+                          residual: Column => Column): DataFrame = {
+    val h = head(spark, path)
+    val c = h.m.statsCol.getOrElse(
       throw new IllegalArgumentException(s"$path tracks no stats column"))
-    val live = m.entries.filter(_.stats match {
-      case NoStats         => true // conservative: no metadata to skip on
-      case EmptyRange      => false
-      case LongRange(a, b) => a <= hi && b >= lo
-      case _: StrRange =>
-        throw new IllegalArgumentException(s"$path tracks STRING stats — use a string range")
-    })
-    fromEntries(spark, dir, StructType.fromDDL(m.ddl), live, m.statsCol)
-      .filter(col(c) >= lo && col(c) <= hi)
+    h.rows(h.m.entries.filter(_.stats match {
+      case NoStats    => true
+      case EmptyRange => false
+      case s => overlaps.applyOrElse(s,
+        (_: Stats) => throw new IllegalArgumentException(s"$path $wrongType"))
+    })).filter(residual(col(c)))
   }
 
   /** Spark compares strings by UNSIGNED UTF-8 BYTE order (UTF8String),
@@ -649,22 +723,10 @@ object MergeTable {
     * the same manifest-level skipping as the LONG variant, with the
     * overlap test in Spark's own UTF-8 byte order and the exact
     * residual on the candidates. */
-  def readRange(spark: SparkSession, path: String, lo: String, hi: String): DataFrame = {
-    val dir = new Path(path)
-    val fs = fsFor(spark, dir)
-    val m = readManifest(fs, dir, versions(fs, dir).last)
-    val c = m.statsCol.getOrElse(
-      throw new IllegalArgumentException(s"$path tracks no stats column"))
-    val live = m.entries.filter(_.stats match {
-      case NoStats        => true // conservative: no metadata to skip on
-      case EmptyRange     => false
-      case StrRange(a, b) => utf8Cmp(a, hi) <= 0 && utf8Cmp(b, lo) >= 0
-      case _: LongRange =>
-        throw new IllegalArgumentException(s"$path tracks LONG stats — use a long range")
-    })
-    fromEntries(spark, dir, StructType.fromDDL(m.ddl), live, m.statsCol)
-      .filter(col(c) >= lo && col(c) <= hi)
-  }
+  def readRange(spark: SparkSession, path: String, lo: String, hi: String): DataFrame =
+    overlapRead(spark, path, "tracks LONG stats — use a long range",
+      { case StrRange(a, b) => utf8Cmp(a, hi) <= 0 && utf8Cmp(b, lo) >= 0 },
+      c => c >= lo && c <= hi)
 
   /** PREFIX READ over a STRING stats column — the T24 APPLICATION
     * SCAN ("all FUNDS.TRANSFER records"): RECIDs of one application
@@ -677,11 +739,6 @@ object MergeTable {
   def readPrefix(spark: SparkSession, path: String, prefix: String): DataFrame = {
     require(prefix.nonEmpty,
       "an empty prefix matches the whole table — use read()")
-    val dir = new Path(path)
-    val fs = fsFor(spark, dir)
-    val m = readManifest(fs, dir, versions(fs, dir).last)
-    val c = m.statsCol.getOrElse(
-      throw new IllegalArgumentException(s"$path tracks no stats column"))
     val pb = prefix.getBytes(StandardCharsets.UTF_8)
     // smallest byte string above every prefix extension: strip the
     // trailing 0xFF run, bump the last remaining byte; an all-0xFF
@@ -692,20 +749,11 @@ object MergeTable {
       if (i < 0) None
       else Some(pb.take(i + 1).updated(i, (pb(i) + 1).toByte))
     }
-    def cmp(a: Array[Byte], b: Array[Byte]): Int =
-      java.util.Arrays.compareUnsigned(a, b)
-    val live = m.entries.filter(_.stats match {
-      case NoStats        => true // conservative: no metadata to skip on
-      case EmptyRange     => false
-      case StrRange(a, b) =>
-        cmp(b.getBytes(StandardCharsets.UTF_8), pb) >= 0 &&
-          upper.forall(u => cmp(a.getBytes(StandardCharsets.UTF_8), u) < 0)
-      case _: LongRange =>
-        throw new IllegalArgumentException(
-          s"$path tracks LONG stats — prefix scans need a STRING key")
-    })
-    fromEntries(spark, dir, StructType.fromDDL(m.ddl), live, m.statsCol)
-      .filter(col(c).startsWith(prefix))
+    def cmp(a: String, b: Array[Byte]): Int =
+      java.util.Arrays.compareUnsigned(a.getBytes(StandardCharsets.UTF_8), b)
+    overlapRead(spark, path, "tracks LONG stats — prefix scans need a STRING key",
+      { case StrRange(a, b) => cmp(b, pb) >= 0 && upper.forall(cmp(a, _) < 0) },
+      _.startsWith(prefix))
   }
 
   /** BATCH KEY LOOKUP: the read-side analog of [[deleteKeys]] — the
@@ -717,13 +765,9 @@ object MergeTable {
     * without an external index. */
   def readKeys(spark: SparkSession, path: String, keys: DataFrame,
                key: String): DataFrame = {
-    val dir = new Path(path)
-    val fs = fsFor(spark, dir)
-    val m = readManifest(fs, dir, versions(fs, dir).last)
+    val h = head(spark, path)
     val ks = keys.select(col(key)).na.drop().distinct()
-    val hits = candidateFiles(spark, dir, m, ks, key)
-    fromEntries(spark, dir, StructType.fromDDL(m.ddl), hits, m.statsCol)
-      .join(ks, Seq(key), "left_semi")
+    h.rows(candidateFiles(h, ks, key)).join(ks, Seq(key), "left_semi")
   }
 
   /** Resolve entries to their VISIBLE rows: plain parquet reads for
@@ -776,82 +820,50 @@ object MergeTable {
     }
   }
 
-  /** File-range probe via BINNED EQUI-JOIN: the manifest's ranges
-    * rasterize driver-side onto fixed-width bins (bin width chosen so
-    * the raster stays <= ~8 entries per file — metadata scale); each
-    * key computes its bin with pure integer arithmetic and
-    * BROADCAST-HASH-joins the raster on the bin, with the exact
-    * [mn, mx] residual applied after the hash match. Same answer as
-    * the naive theta join (the residual makes it exact), but the work
-    * per key is the files overlapping ONE bin, not all files. Spans
-    * wider than 2^62 (arithmetic would overflow) fall back to the
-    * theta probe. */
+  /** File-range probe via BINNED EQUI-JOIN, for LONG and STRING keys
+    * alike. Each bound maps to an order-preserving unsigned 64-bit
+    * image — a LONG with its sign bit flipped, a STRING's [[u56]] — and
+    * a bin is that image shifted right by `s` bits, so no span, up to
+    * the whole LONG domain, can overflow. The ranges rasterize
+    * driver-side onto the bins (`s` chosen so the raster stays <= ~8
+    * entries per file — metadata scale); each key computes its bin
+    * with pure integer arithmetic and BROADCAST-HASH-joins the raster
+    * on it, and the raster's true typed bounds give the exact residual
+    * after the hash match. Same answer as a per-key theta join of all
+    * ranges (the residual makes it exact), but the work per key is the
+    * files overlapping ONE bin, not all files. Inverted (`mn > mx`)
+    * LONG ranges hold nothing and never match. */
   private[graft] def rangeCandidates(keys: DataFrame, key: String,
-                                     ranged: Seq[(String, Long, Long)]): Set[String] = {
-    val live = ranged.filter(e => e._2 <= e._3)
-    if (live.isEmpty) return Set.empty
-    val gmin = live.map(_._2).min
-    val gmax = live.map(_._3).max
-    val span = BigInt(gmax) - BigInt(gmin) + 1
-    if (span > BigInt(Long.MaxValue) / 2)
-      return rangeCandidatesTheta(keys, key, live)
-    binnedProbe(
-      keys.select(col(key).as("__mt_k")).na.drop().distinct()
-        .filter(col("__mt_k") >= gmin && col("__mt_k") <= gmax)
-        .withColumn("__mt_kb", col("__mt_k")),
-      raster => raster.withColumn("__mt_resid",
-        col("__mt_k") >= col("__mt_mn") && col("__mt_k") <= col("__mt_mx")),
-      live, gmin, span)
-  }
-
-  /** The shared binned core: `live` carries (name, binMin, binMax) in
-    * an order-preserving non-negative integer bin space; `keysBinned`
-    * carries the probe value (`__mt_k`) plus its bin-space image
-    * (`__mt_kb`); `addResidual` appends the exact `__mt_resid`
-    * predicate (true string/long bounds) evaluated after the bin hash
-    * match — bins are conservative, the residual makes the candidate
-    * set exact. */
-  private def binnedProbe(keysBinned: DataFrame,
-                          addResidual: DataFrame => DataFrame,
-                          live: Seq[(String, Long, Long)],
-                          gmin: Long, span: BigInt): Set[String] = {
-    val spark = keysBinned.sparkSession
-    // bin width: start near 4 bins/file and widen until the raster
-    // totals <= 8 entries/file (a file spanning the whole key space
-    // cannot blow the raster up to #files x #bins)
-    def rasterSize(w: Long): Long =
-      live.map(e => (e._3 - gmin) / w - (e._2 - gmin) / w + 1).sum
-    var nBins = math.min(4L * live.size, 1L << 20)
-    def widthFor(n: Long): Long =
-      ((span + n - 1) / n).max(1).toLong
-    var w = widthFor(nBins)
-    while (nBins > 1 && rasterSize(w) > 8L * live.size) {
-      nBins /= 2; w = widthFor(nBins)
+                                     ranged: Seq[(String, Stats)]): Set[String] = {
+    val live = ranged.collect {
+      case (n, LongRange(a, b)) if a <= b =>
+        (n, a: Any, b: Any, a ^ Long.MinValue, b ^ Long.MinValue)
+      case (n, StrRange(a, b)) => (n, a: Any, b: Any, u56(a), u56(b))
     }
-    val raster = live.flatMap(e =>
-      ((e._2 - gmin) / w to (e._3 - gmin) / w).map(b =>
-        (b, e._1, e._2, e._3)))
-    val rasterDf = spark.createDataFrame(raster)
-      .toDF("__mt_bin", "__mt_name", "__mt_mn", "__mt_mx")
-    addResidual(keysBinned
-      .withColumn("__mt_bin", expr(s"(__mt_kb - ${gmin}L) div ${w}L"))
-      .join(broadcast(rasterDf), Seq("__mt_bin")))
-      .filter(col("__mt_resid"))
-      .select("__mt_name").distinct()
-      .collect().map(_.getString(0)).toSet
-  }
-
-  /** The naive per-key linear probe (#keys x #files comparisons) —
-    * the overflow fallback, and the spec's equality oracle for the
-    * binned probe. */
-  private[graft] def rangeCandidatesTheta(keys: DataFrame, key: String,
-                                          ranged: Seq[(String, Long, Long)]): Set[String] = {
-    val spark = keys.sparkSession
-    val ranges = spark.createDataFrame(ranged)
-      .toDF("__mt_name", "__mt_mn", "__mt_mx")
-    keys.select(col(key)).na.drop().distinct()
-      .join(broadcast(ranges),
-        col(key) >= col("__mt_mn") && col(key) <= col("__mt_mx"))
+    if (live.isEmpty) return Set.empty
+    val isStr = live.head._2.isInstanceOf[String]
+    val unsigned = Ordering.fromLessThan[Long](java.lang.Long.compareUnsigned(_, _) < 0)
+    val span = live.map(_._5).max(unsigned) - live.map(_._4).min(unsigned)
+    // start near 4 bins/file and widen until the raster totals <= 8
+    // entries/file (a file spanning the whole key space cannot blow
+    // the raster up to #files x #bins); s >= 1 keeps bins non-negative
+    val bins = math.min(4L * live.size, 1L << 20)
+    var s = math.max(1,
+      64 - java.lang.Long.numberOfLeadingZeros(java.lang.Long.divideUnsigned(span, bins)))
+    def rasterSize(s: Int): Long = live.map(e => (e._5 >>> s) - (e._4 >>> s) + 1).sum
+    while (s < 63 && rasterSize(s) > 8L * live.size) s += 1
+    val kt = if (isStr) StringType else LongType
+    val raster = keys.sparkSession.createDataFrame(
+      live.flatMap(e => ((e._4 >>> s) to (e._5 >>> s)).map(b => Row(b, e._1, e._2, e._3)))
+        .asJava,
+      StructType(Seq(StructField("__mt_bin", LongType), StructField("__mt_name", StringType),
+        StructField("__mt_mn", kt), StructField("__mt_mx", kt))))
+    val k = col("__mt_k")
+    keys.select(col(key).as("__mt_k")).na.drop().distinct()
+      .withColumn("__mt_bin", shiftrightunsigned(
+        if (isStr) u56Col(k) else k.bitwiseXOR(lit(Long.MinValue)), s))
+      .join(broadcast(raster), Seq("__mt_bin"))
+      .filter(k >= col("__mt_mn") && k <= col("__mt_mx"))
       .select("__mt_name").distinct()
       .collect().map(_.getString(0)).toSet
   }
@@ -860,7 +872,7 @@ object MergeTable {
     * Long. ORDER-PRESERVING for Spark's binary string comparison
     * (UTF8 bytes compared unsigned): s1 <= s2 implies u56(s1) <=
     * u56(s2), so a key inside a file's true string range always lands
-    * inside the file's u56 bin span — the string probe's bin space.
+    * inside the file's bin span — the string keys' unsigned image.
     * Strings sharing their first 7 bytes share a u56 (same bin); the
     * exact string residual decides. */
   private[graft] def u56(s: String): Long = {
@@ -881,73 +893,26 @@ object MergeTable {
     conv(rpad(hex(substring(c.cast("binary"), lit(1), lit(7))), 14, "0"), 16, 10)
       .cast(LongType)
 
-  /** STRING-key file-range probe (the reference's RECID shape): bins
-    * live in u56 space (order-preserving 7-byte prefix), the residual
-    * compares the TRUE string bounds — exact, never just the prefix.
-    * Same binned-equi-join scaling argument as the LONG probe; u56
-    * spans fit in 2^56, so no overflow fallback is needed. */
-  private[graft] def strRangeCandidates(keys: DataFrame, key: String,
-                                        ranged: Seq[(String, String, String)]): Set[String] = {
-    if (ranged.isEmpty) return Set.empty
-    val asBins = ranged.map(e => (e._1, u56(e._2), u56(e._3)))
-    val gmin = asBins.map(_._2).min
-    val gmax = asBins.map(_._3).max
-    val spark = keys.sparkSession
-    val boundsDf = spark.createDataFrame(ranged)
-      .toDF("__mt_name", "__mt_smn", "__mt_smx")
-    binnedProbe(
-      keys.select(col(key).as("__mt_k")).na.drop().distinct()
-        .withColumn("__mt_kb", u56Col(col("__mt_k")))
-        .filter(col("__mt_kb") >= gmin && col("__mt_kb") <= gmax),
-      raster => raster.join(broadcast(boundsDf), Seq("__mt_name"))
-        .withColumn("__mt_resid",
-          col("__mt_k") >= col("__mt_smn") && col("__mt_k") <= col("__mt_smx")),
-      asBins, gmin, BigInt(gmax) - BigInt(gmin) + 1)
-  }
-
-  /** String theta probe — the spec's equality oracle. */
-  private[graft] def strRangeCandidatesTheta(keys: DataFrame, key: String,
-                                             ranged: Seq[(String, String, String)]): Set[String] = {
-    val spark = keys.sparkSession
-    val ranges = spark.createDataFrame(ranged)
-      .toDF("__mt_name", "__mt_smn", "__mt_smx")
-    keys.select(col(key)).na.drop().distinct()
-      .join(broadcast(ranges),
-        col(key) >= col("__mt_smn") && col(key) <= col("__mt_smx"))
-      .select("__mt_name").distinct()
-      .collect().map(_.getString(0)).toSet
-  }
-
   /** Candidate files for a set of keys: with tracked ranges this is a
     * metadata-only probe of the (distinct) keys against the manifest
-    * range table ([[rangeCandidates]] / [[strRangeCandidates]] per
-    * the tracked column's type) — the base is never scanned; a false
-    * positive only costs rewrite volume, never correctness (ranges
-    * are true min/max, so every real hit file is a candidate).
+    * range table ([[rangeCandidates]]) — the base is never scanned; a
+    * false positive only costs rewrite volume, never correctness
+    * (ranges are true min/max, so every real hit file is a candidate).
     * Without stats it falls back to scanning the base for
     * `_metadata.file_path` hits. */
-  private def candidateFiles(spark: SparkSession, dir: Path, m: Manifest,
-                             keys: DataFrame, key: String): Seq[Entry] =
-    m.statsCol match {
+  private def candidateFiles(h: Head, keys: DataFrame, key: String): Seq[Entry] =
+    h.m.statsCol match {
       case Some(c) if c == key =>
-        val longR = m.entries.collect {
-          case Entry(n, LongRange(a, b), _, _, _) => (n, a, b) }
-        val strR = m.entries.collect {
-          case Entry(n, StrRange(a, b), _, _, _) => (n, a, b) }
-        val hit = rangeCandidates(keys, key, longR) ++
-          strRangeCandidates(keys, key, strR)
+        val hit = rangeCandidates(keys, key, h.m.entries.map(e => e.name -> e.stats))
         // entries with no metadata at all stay conservative
         // candidates; EmptyRange prunes by construction
-        val statless = m.entries.filter(_.stats == NoStats)
-        m.entries.filter(e => hit.contains(e.name)) ++ statless
+        h.m.entries.filter(e => hit.contains(e.name)) ++
+          h.m.entries.filter(_.stats == NoStats)
       case _ =>
-        val base = fromEntries(spark, dir, StructType.fromDDL(m.ddl),
-          m.entries, m.statsCol, withFileCol = true)
-        val hitNames = baseNames(base
+        val hitNames = baseNames(h.rows(h.m.entries, withFileCol = true)
           .join(keys.select(col(key)).distinct(), Seq(key)))
-        m.entries.filter(e => hitNames(e.name))
+        h.m.entries.filter(e => hitNames(e.name))
     }
-
 
   /** Schema evolution contract shared by [[merge]] and [[applyBatch]]:
     * updates may ADD columns (the manifest DDL widens; pre-evolution
@@ -990,56 +955,54 @@ object MergeTable {
     * exchange (no sampling job). A steady epoch's hot range then stays
     * in one file, and the next epoch on the same keys hits that file
     * alone, not every file a parallel write spread them over. Bytes are
-    * the hit files' lengths plus the upserts' [[measuredBytes]]. Larger
-    * rewrites keep the write's own parallel partitioning — a range
-    * shuffle there costs a sampling pass and a second shuffle of every
-    * rewritten row — as do untracked tables and upserts whose size is
-    * only a guess: a guess must not decide that one task writes it
-    * all. */
-  private def layout(rows: DataFrame, ups: DataFrame, hits: Seq[Entry],
-                     dir: Path, fs: FileSystem,
-                     statsCol: Option[String]): DataFrame = {
-    def small = measuredBytes(ups).exists(upBytes => upBytes +
-      hits.map(e => fs.getFileStatus(new Path(dir, e.name)).getLen).sum <= SmallFileBytes)
-    if (statsCol.isDefined && small) rows.repartition(1) else rows
+    * the hit files' lengths plus the upserts' [[measuredBytes]] (none
+    * for a delete). Larger rewrites keep the write's own parallel
+    * partitioning — a range shuffle there costs a sampling pass and a
+    * second shuffle of every rewritten row — as do untracked tables and
+    * upserts whose size is only a guess: a guess must not decide that
+    * one task writes it all. */
+  private def layout(rows: DataFrame, ups: Option[DataFrame], hits: Seq[Entry],
+                     h: Head): DataFrame = {
+    def small = ups.fold(Option(BigInt(0)))(measuredBytes)
+      .exists(_ + hits.map(h.len).sum <= SmallFileBytes)
+    if (h.m.statsCol.isDefined && small) rows.repartition(1) else rows
   }
 
-  /** The copy-on-write body [[merge]] and [[applyBatch]] share, run
-    * under the OCC retry: candidate files (range-overlap when the key is
-    * the tracked stats column — found WITHOUT scanning the base) of
-    * the upsert keys plus the non-NULL `deletes` keys rewrite as their
-    * unmatched survivors + every upsert row, laid out by [[layout]];
-    * all other files carry into the new manifest untouched. `empty`
-    * (no key touched) commits nothing and returns the current
-    * version. */
+  /** The ONE copy-on-write rewrite: the rows of the `hits` files that
+    * `survive`, plus every `ups` row, are staged under `schema` (laid
+    * out by [[layout]]) and replace the hits; every other file carries
+    * into the successor manifest untouched, by name. Nothing to write
+    * (no hits, no upserts) stages nothing. */
+  private def rewrite(h: Head, schema: StructType, hits: Seq[Entry],
+                      survive: DataFrame => DataFrame,
+                      ups: Option[DataFrame]): Manifest = {
+    val cols = schema.fieldNames.map(col).toIndexedSeq
+    val survivors =
+      if (hits.isEmpty) None else Some(survive(h.rows(hits, schema)).select(cols: _*))
+    val staged = (survivors ++ ups).reduceOption(_.unionByName(_)).toSeq
+      .flatMap(rows => stage(layout(rows, ups, hits, h), h.dir, h.fs, h.m.statsCol))
+    val hitNames = hits.map(_.name).toSet
+    Manifest(schema.toDDL, h.m.statsCol,
+      h.m.entries.filterNot(e => hitNames(e.name)) ++ staged)
+  }
+
+  /** The key-set mutation [[merge]], [[applyBatch]] and [[deleteKeys]]
+    * share: candidate files (range-overlap when the key is the tracked
+    * stats column — found WITHOUT scanning the base) of the upsert keys
+    * plus the non-NULL `deletes` keys go through [[rewrite]], keeping
+    * the rows whose key neither side names. `empty` (no key touched)
+    * commits nothing and returns the current version. */
   private def commitUpserts(spark: SparkSession, path: String, what: String,
-                            upserts: DataFrame, deletes: Option[DataFrame],
+                            upserts: Option[DataFrame], deletes: Option[DataFrame],
                             key: String, empty: Boolean = false): Int =
-    withOccRetry(s"$what into $path") {
-      val dir = new Path(path)
-      val fs = fsFor(spark, dir)
-      val v = versions(fs, dir).last
-      val m = readManifest(fs, dir, v)
-      val newSchema = evolvedSchema(StructType.fromDDL(m.ddl), upserts)
-      if (empty) v
+    commit(spark, path, s"$what $path") { h =>
+      val schema = upserts.fold(h.schema)(evolvedSchema(h.schema, _))
+      if (empty) Left(h.v)
       else {
-        val ups = upserts.select(newSchema.fieldNames.map(col).toIndexedSeq: _*)
-        val touched = (ups.select(col(key)) +: deletes.toSeq).reduce(_.unionByName(_))
-        val hits = candidateFiles(spark, dir, m, touched, key)
-        val hitNames = hits.map(_.name).toSet
-        val survivors =
-          if (hits.isEmpty) ups // pure append
-          else fromEntries(spark, dir, newSchema, hits, m.statsCol)
-            .join(touched, Seq(key), "left_anti")
-            .select(newSchema.fieldNames.map(col).toIndexedSeq: _*)
-            .unionByName(ups)
-        val rewritten = stage(layout(survivors, ups, hits, dir, fs, m.statsCol),
-          dir, fs, m.statsCol)
-        fireMidCommitHook()
-        publish(fs, dir, v + 1,
-          Manifest(newSchema.toDDL, m.statsCol,
-            m.entries.filterNot(e => hitNames(e.name)) ++ rewritten))
-        v + 1
+        val ups = upserts.map(_.select(schema.fieldNames.map(col).toIndexedSeq: _*))
+        val touched = (ups.map(_.select(col(key))) ++ deletes).reduce(_.unionByName(_))
+        Right(rewrite(h, schema, candidateFiles(h, touched, key),
+          _.join(touched, Seq(key), "left_anti"), ups))
       }
     }
 
@@ -1063,7 +1026,7 @@ object MergeTable {
     // run it ONCE, outside the OCC loop, so a contended merge never
     // re-pays the aggregation pass per retry
     checkKeys(updates, None, key, "updates")
-    commitUpserts(spark, path, "merge", updates, None, key)
+    commitUpserts(spark, path, "merge into", Some(updates), None, key)
   }
 
   /** ONE-COMMIT EPOCH APPLY: upserts and deletes of one CDC epoch
@@ -1101,39 +1064,21 @@ object MergeTable {
     val dels0 = deletes.select(col(key)).na.drop()
     val dels = if (collapsed) dels0 else dels0.distinct()
     val nonEmpty = checkKeys(upserts, Some(dels), key, "upserts", collapsed)
-    commitUpserts(spark, path, "applyBatch", upserts, Some(dels), key,
+    commitUpserts(spark, path, "applyBatch into", Some(upserts), Some(dels), key,
       empty = !nonEmpty)
   }
 
   /** COW DELETE BY KEY SET: like [[deleteWhere]] but the doomed keys
     * arrive as a DataFrame (single `key` column) — the CDC-apply
     * shape, where a delete batch can be data-sized and must join, not
-    * collect into a driver-side predicate. Only candidate files
-    * (range-pruned like [[merge]]) rewrite. Retries a lost publish
-    * race from the new latest. Returns the new version. */
+    * collect into a driver-side predicate. The upsert-free case of the
+    * [[merge]] rewrite: only candidate files (range-pruned) rewrite.
+    * Retries a lost publish race from the new latest. Returns the new
+    * version. */
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
-                 key: String): Int = withOccRetry(s"deleteKeys from $path") {
-    val dir = new Path(path)
-    val fs = fsFor(spark, dir)
-    val v = versions(fs, dir).last
-    val m = readManifest(fs, dir, v)
-    val schema = StructType.fromDDL(m.ddl)
-    val ks = keys.select(col(key)).na.drop().distinct()
-    val hits = candidateFiles(spark, dir, m, ks, key)
-    val hitNames = hits.map(_.name).toSet
-    val next =
-      if (hits.isEmpty) m.entries
-      else {
-        val survivors = fromEntries(spark, dir, schema, hits, m.statsCol)
-          .join(ks, Seq(key), "left_anti")
-          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-        m.entries.filterNot(e => hitNames(e.name)) ++
-          stage(survivors, dir, fs, m.statsCol)
-      }
-    fireMidCommitHook()
-    publish(fs, dir, v + 1, m.copy(entries = next))
-    v + 1
-  }
+                 key: String): Int =
+    commitUpserts(spark, path, "deleteKeys from", None,
+      Some(keys.select(col(key)).na.drop().distinct()), key)
 
   /** COW DELETE by arbitrary predicate: rewrites only the files
     * holding rows matching `cond`, found by ONE base scan (a general
@@ -1146,27 +1091,11 @@ object MergeTable {
     * row's fate). Retries a lost publish race. Returns the new
     * version. */
   def deleteWhere(spark: SparkSession, path: String, cond: Column): Int =
-    withOccRetry(s"deleteWhere from $path") {
-      val dir = new Path(path)
-      val fs = fsFor(spark, dir)
-      val v = versions(fs, dir).last
-      val m = readManifest(fs, dir, v)
-      val schema = StructType.fromDDL(m.ddl)
+    commit(spark, path, s"deleteWhere from $path") { h =>
       val hitCond = coalesce(cond, lit(false))
-      val base = fromEntries(spark, dir, schema, m.entries, m.statsCol,
-        withFileCol = true)
-      val hitNames = baseNames(base.filter(hitCond))
-      val hits = m.entries.filter(e => hitNames(e.name))
-      val next =
-        if (hits.isEmpty) m.entries
-        else {
-          val survivors = fromEntries(spark, dir, schema, hits, m.statsCol)
-            .filter(!hitCond)
-          m.entries.filterNot(e => hitNames(e.name)) ++
-            stage(survivors, dir, fs, m.statsCol)
-        }
-      publish(fs, dir, v + 1, m.copy(entries = next))
-      v + 1
+      val hitNames = baseNames(h.rows(h.m.entries, withFileCol = true).filter(hitCond))
+      Right(rewrite(h, h.schema, h.m.entries.filter(e => hitNames(e.name)),
+        _.filter(!hitCond), None))
     }
 
   /** Write a deletion-vector sidecar (`dv-*.parquet`, columns
@@ -1200,21 +1129,15 @@ object MergeTable {
     * no-op that commits nothing. Returns the (possibly unchanged)
     * version. */
   def deleteKeysMor(spark: SparkSession, path: String, keys: DataFrame,
-                    key: String): Int = withOccRetry(s"deleteKeysMor from $path") {
-    val dir = new Path(path)
-    val fs = fsFor(spark, dir)
-    val v = versions(fs, dir).last
-    val m = readManifest(fs, dir, v)
-    require(m.statsCol.contains(key),
+                    key: String): Int = commit(spark, path, s"deleteKeysMor from $path") { h =>
+    require(h.m.statsCol.contains(key),
       s"merge-on-read deletes require the tracked stats key (table tracks " +
-        s"${m.statsCol.getOrElse("none")}, got '$key') — use deleteKeys/deleteWhere")
-    val schema = StructType.fromDDL(m.ddl)
+        s"${h.m.statsCol.getOrElse("none")}, got '$key') — use deleteKeys/deleteWhere")
     val ks = keys.select(col(key)).na.drop().distinct()
-    val hits = candidateFiles(spark, dir, m, ks, key)
-    if (hits.isEmpty) v
+    val hits = candidateFiles(h, ks, key)
+    if (hits.isEmpty) Left(h.v)
     else {
-      val victims = fromEntries(spark, dir, schema, hits, m.statsCol,
-          withFileCol = true)
+      val victims = h.rows(hits, withFileCol = true)
         .join(ks, Seq(key), "left_semi")
         .select(
           element_at(split(col("__mt_file"), "/"), -1).as("__dv_file"),
@@ -1223,69 +1146,36 @@ object MergeTable {
       try {
         val perFile = victims.groupBy("__dv_file").count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (perFile.isEmpty) v // keys absent (or already dead): no-op
+        if (perFile.isEmpty) Left(h.v) // keys absent (or already dead): no-op
         else {
-          val dvName = writeDv(victims, dir, fs)
-          fireMidCommitHook()
-          val next = m.entries.map { e =>
+          val dvName = writeDv(victims, h.dir, h.fs)
+          Right(h.m.copy(entries = h.m.entries.map { e =>
             perFile.get(e.name) match {
               case Some(n) =>
                 e.copy(dvs = e.dvs :+ dvName, dvRows = e.dvRows + n)
               case None => e
             }
-          }
-          publish(fs, dir, v + 1, m.copy(entries = next))
-          v + 1
+          }))
         }
       } finally victims.unpersist()
     }
   }
 
-  /** Materialize all deletion vectors: rewrite every dv'd file
-    * without its dead rows (key-sorted into tight disjoint ranges,
-    * like tracked compaction) and drop the dv references — the
-    * MOR-side analog of [[optimize]], run when accumulated dv
-    * anti-join cost outweighs one rewrite. Content-neutral w.r.t.
-    * VISIBLE rows, and each purged file's unit id (name#dvs) denotes
-    * exactly those rows, so the rewrite carries [[Lineage]] and a
-    * change feed spanning the purge scans ZERO files. Returns the new
-    * version, or -1 when no deletion vectors exist. */
+  /** Materialize all deletion vectors: [[optimize]]'s compaction
+    * ([[compact]]) over every dv'd file — rewritten without its dead
+    * rows, key-sorted into tight disjoint ranges, dv references
+    * dropped — run when accumulated dv anti-join cost outweighs one
+    * rewrite. Content-neutral w.r.t. VISIBLE rows, and each purged
+    * file's unit id (name#dvs) denotes exactly those rows, so the
+    * rewrite carries [[Lineage]] and a change feed spanning the purge
+    * scans ZERO files. Returns the new version, or -1 when no deletion
+    * vectors exist. */
   def purgeDeletes(spark: SparkSession, path: String,
                    targetBytes: Long = 128L * 1024 * 1024): Int =
-    withOccRetry(s"purgeDeletes $path") {
-      val dir = new Path(path)
-      val fs = fsFor(spark, dir)
-      val v = versions(fs, dir).last
-      val m = readManifest(fs, dir, v)
-      val dirty = m.entries.filter(_.dvs.nonEmpty)
-      if (dirty.isEmpty) -1
-      else {
-        val schema = StructType.fromDDL(m.ddl)
-        val visible = fromEntries(spark, dir, schema, dirty, m.statsCol)
-        val totalBytes = dirty.map(e =>
-          fs.getFileStatus(new Path(dir, e.name)).getLen).sum
-        val nOut = math.max(1L,
-          (totalBytes + targetBytes - 1) / targetBytes).toInt
-        val shaped = m.statsCol match {
-          case Some(c) => visible.repartitionByRange(nOut, col(c))
-            .sortWithinPartitions(col(c))
-          case None => visible.coalesce(nOut) // unreachable: dvs need a key
-        }
-        val staged = stage(shaped, dir, fs, m.statsCol)
-        val origins = dirty.map(unitId).distinct
-        val rewritten =
-          if (staged.isEmpty || origins.size > MaxLineageUnits) staged
-          else {
-            val gid = UUID.randomUUID().toString
-            staged.map(_.copy(lineage =
-              Some(Lineage(gid, staged.size, origins))))
-          }
-        val dirtyNames = dirty.map(_.name).toSet
-        fireMidCommitHook()
-        publish(fs, dir, v + 1, m.copy(entries =
-          m.entries.filterNot(e => dirtyNames(e.name)) ++ rewritten))
-        v + 1
-      }
+    commit(spark, path, s"purgeDeletes $path") { h =>
+      val dirty = h.m.entries.filter(_.dvs.nonEmpty)
+      if (dirty.isEmpty) Left(-1)
+      else Right(compact(h, dirty.map(e => e -> h.len(e)), targetBytes))
     }
 
   /** The two sides' files a manifest-aware diff must actually scan.
@@ -1315,21 +1205,8 @@ object MergeTable {
     val idShared = mb.entries.map(unitId).toSet
       .intersect(ma.entries.map(unitId).toSet)
     def remaining(m: Manifest): Seq[(Entry, Set[String])] = {
-      val byGid = m.entries.filter(_.lineage.isDefined)
-        .groupBy(_.lineage.get.gid)
-      m.entries.filterNot(e => idShared(unitId(e))).map { e =>
-        e -> (e.lineage match {
-          // empty origins never occur (optimize compacts >= 2 files)
-          // but would make the unit set vacuously excludable — guard.
-          // A deletion vector on any member voids the group's origin
-          // claim (the group no longer holds exactly its origins'
-          // rows); the member's own unit id stays sound.
-          case Some(l) if l.origins.nonEmpty && byGid(l.gid).size == l.size &&
-              byGid(l.gid).forall(_.dvs.isEmpty) =>
-            l.origins.toSet
-          case _ => Set(unitId(e))
-        })
-      }
+      val units = unitsOf(m.entries)
+      m.entries.filterNot(e => idShared(unitId(e))).map(e => e -> units(e).toSet)
     }
     val bu = remaining(mb)
     val au = remaining(ma)
@@ -1548,69 +1425,51 @@ object MergeTable {
   def optimize(spark: SparkSession, path: String,
                smallBytes: Long = SmallFileBytes,
                targetBytes: Long = 128L * 1024 * 1024): Int =
-    withOccRetry(s"optimize $path") {
-      val dir = new Path(path)
-      val fs = fsFor(spark, dir)
-      val v = versions(fs, dir).last
-      val m = readManifest(fs, dir, v)
-      val sized = m.entries.map(e =>
-        (e, fs.getFileStatus(new Path(dir, e.name)).getLen))
-      val (small, big) = sized.partition(_._2 < smallBytes)
-      if (small.size < 2) -1 // nothing to gain from one file
-      else {
-        val totalSmall = small.map(_._2).sum
-        val nOut = math.max(1L, (totalSmall + targetBytes - 1) / targetBytes).toInt
-        val tail = fromEntries(spark, dir, StructType.fromDDL(m.ddl),
-          small.map(_._1), m.statsCol)
-        val compacted = m.statsCol match {
-          // one small-tail-sized shuffle buys disjoint ranges — the
-          // probe keeps pruning through every compaction cycle
-          case Some(c) => tail.repartitionByRange(nOut, col(c))
-            .sortWithinPartitions(col(c))
-          // untracked: boundary change only — no shuffle, no reorder
-          case None => tail.coalesce(nOut)
-        }
-        val staged = stage(compacted, dir, fs, m.statsCol)
-        // content units of the compacted sources, chained through
-        // earlier intact groups so lineage survives repeated cycles.
-        // Chaining is sound ONLY when the member's WHOLE intact group
-        // compacts together: a group's origins describe the UNION of
-        // its members' rows, and a member compacted alone (e.g. the
-        // small remainder file of an earlier compaction, caught while
-        // its target-sized siblings stay put) holds an unknowable
-        // slice of them — inheriting the full origin set would let a
-        // later feed prove too much and skip files whose rows differ.
-        // The member's own NAME always denotes exactly its content,
-        // so it is the fallback unit.
-        val smallNames = small.map(_._1.name).toSet
-        val byGid = m.entries.filter(_.lineage.isDefined)
-          .groupBy(_.lineage.get.gid)
-        val origins = small.map(_._1).flatMap { e =>
-          e.lineage match {
-            // a dv'd member also blocks chaining: the group no longer
-            // holds exactly its origins' rows. unitId (name, or
-            // name#dvs) denotes exactly the member's VISIBLE rows —
-            // which is what the compaction read — so it is always a
-            // sound unit, and compacting a dv'd file materializes its
-            // deletions as a dataChange=false step.
-            case Some(l) if l.origins.nonEmpty &&
-                byGid(l.gid).size == l.size &&
-                byGid(l.gid).forall(g => smallNames(g.name) && g.dvs.isEmpty) =>
-              l.origins
-            case _ => Seq(unitId(e))
-          }
-        }.distinct
-        val rewritten =
-          if (staged.isEmpty || origins.size > MaxLineageUnits) staged
-          else {
-            val gid = UUID.randomUUID().toString
-            staged.map(_.copy(lineage =
-              Some(Lineage(gid, staged.size, origins))))
-          }
-        publish(fs, dir, v + 1, m.copy(entries = big.map(_._1) ++ rewritten))
-        v + 1
-      }
+    commit(spark, path, s"optimize $path") { h =>
+      val small = h.m.entries.map(e => e -> h.len(e)).filter(_._2 < smallBytes)
+      if (small.size < 2) Left(-1) // nothing to gain from one file
+      else Right(compact(h, small, targetBytes))
     }
+
+  /** The compaction [[optimize]] and [[purgeDeletes]] share: the
+    * visible rows of `members` (entry, byte length) rewrite into
+    * ceil(bytes/target) files that replace them, stamped with one
+    * [[Lineage]] group; every other file keeps its place by name. */
+  private def compact(h: Head, members: Seq[(Entry, Long)],
+                      targetBytes: Long): Manifest = {
+    val nOut = math.max(1L,
+      (members.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
+    val rows = h.rows(members.map(_._1))
+    val staged = stage(h.m.statsCol match {
+      // one member-sized shuffle buys disjoint ranges — the probe
+      // keeps pruning through every compaction cycle
+      case Some(c) => rows.repartitionByRange(nOut, col(c)).sortWithinPartitions(col(c))
+      // untracked: boundary change only — no shuffle, no reorder
+      case None => rows.coalesce(nOut)
+    }, h.dir, h.fs, h.m.statsCol)
+    // content units of the compacted sources, chained through earlier
+    // intact groups so lineage survives repeated cycles. Chaining is
+    // sound ONLY when the member's WHOLE intact group compacts
+    // together: a group's origins describe the UNION of its members'
+    // rows, and a member compacted alone (e.g. the small remainder
+    // file of an earlier compaction, caught while its target-sized
+    // siblings stay put) holds an unknowable slice of them — inheriting
+    // the full origin set would let a later feed prove too much and
+    // skip files whose rows differ. A dv'd member's unit id (name#dvs)
+    // denotes exactly the VISIBLE rows the compaction read, so
+    // compacting it materializes its deletions as a dataChange=false
+    // step.
+    val names = members.map(_._1.name).toSet
+    val units = unitsOf(h.m.entries, g => names(g.name))
+    val origins = members.flatMap(m => units(m._1)).distinct
+    val rewritten =
+      if (staged.isEmpty || origins.size > MaxLineageUnits) staged
+      else {
+        val gid = UUID.randomUUID().toString
+        staged.map(_.copy(lineage = Some(Lineage(gid, staged.size, origins))))
+      }
+    h.m.copy(entries = h.m.entries.filterNot(e => names(e.name)) ++ rewritten)
+  }
 
   /** Follow the table's change feed as a STRUCTURED STREAMING source
     * (offsets = table versions, each micro-batch a manifest-aware

@@ -337,6 +337,15 @@ class MergeTableSpec extends AnyFunSuite {
       s"file-diff feed must equal the full-snapshot derivation: $feed vs $expected")
   }
 
+  /** The naive per-key theta probe (#keys x #files comparisons), for
+    * either key type: the equality oracle for the binned probe. */
+  private def thetaCandidates(keys: org.apache.spark.sql.DataFrame,
+                              ranges: org.apache.spark.sql.DataFrame): Set[String] =
+    keys.select(col("k")).na.drop().distinct()
+      .join(broadcast(ranges), col("k") >= col("mn") && col("k") <= col("mx"))
+      .select("name").distinct()
+      .collect().map(_.getString(0)).toSet
+
   test("binned range probe candidates equal the theta probe, any range shape") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
@@ -350,11 +359,25 @@ class MergeTableSpec extends AnyFunSuite {
         ("empty", Long.MaxValue, Long.MinValue)) // zero-row file sentinel
     val keys = ((0 until 2000).map(_ => Some(rnd.nextInt(110000).toLong)) ++
       Seq(None, Some(77777L), Some(77777L))).toDF("k") // nulls + dups
-    val binned = MergeTable.rangeCandidates(keys, "k", entries)
-    val theta = MergeTable.rangeCandidatesTheta(keys, "k", entries)
-    assert(binned == theta, s"probe mismatch: ${binned.diff(theta)} / ${theta.diff(binned)}")
-    assert(binned.contains("wide") && binned.contains("point") &&
-      !binned.contains("empty"))
+    // the same inputs plus ranges reaching both ends of the LONG domain
+    // (a span over 2^62) and keys at both extremes
+    val extremes = Seq(("lowest", Long.MinValue, Long.MinValue + 10),
+      ("highest", Long.MaxValue - 10, Long.MaxValue),
+      ("negative", Long.MinValue / 2, -1L),
+      ("everything", Long.MinValue, Long.MaxValue))
+    val extremeKeys = Seq(Long.MinValue, Long.MinValue + 3, -5L,
+      Long.MaxValue - 1, Long.MaxValue).map(Option(_)).toDF("k")
+    val found = Seq((entries, keys), (entries ++ extremes, keys.union(extremeKeys))).map {
+      case (es, ks) =>
+        val binned = MergeTable.rangeCandidates(ks, "k",
+          es.map(e => e._1 -> MergeTable.LongRange(e._2, e._3)))
+        val theta = thetaCandidates(ks, es.toDF("name", "mn", "mx"))
+        assert(binned == theta, s"probe mismatch: ${binned.diff(theta)} / ${theta.diff(binned)}")
+        assert(binned.contains("wide") && binned.contains("point") &&
+          !binned.contains("empty"))
+        binned
+    }
+    assert(extremes.map(_._1).forall(found.last.contains))
   }
 
   test("string probe (u56 bins + exact residual) equals the string theta probe") {
@@ -373,8 +396,9 @@ class MergeTableSpec extends AnyFunSuite {
         ("wide", "", "ZZZZZZZZZZ"))
     val keys = ((0 until 3000).map(i => Some(key(i))) ++
       Seq(None, Some("REC77777.0042"), Some("REC55555.0000ABCD"))).toDF("k")
-    val binned = MergeTable.strRangeCandidates(keys, "k", entries)
-    val theta = MergeTable.strRangeCandidatesTheta(keys, "k", entries)
+    val binned = MergeTable.rangeCandidates(keys, "k",
+      entries.map(e => e._1 -> MergeTable.StrRange(e._2, e._3)))
+    val theta = thetaCandidates(keys, entries.toDF("name", "mn", "mx"))
     assert(binned == theta,
       s"probe mismatch: ${binned.diff(theta)} / ${theta.diff(binned)}")
     assert(binned.contains("wide") && binned.contains("point") &&
@@ -1311,7 +1335,9 @@ class MergeTableSpec extends AnyFunSuite {
     // validation, candidate probe and staging write (each shuffle
     // stage is its own job under AQE). The path that proved uniqueness
     // and disjointness with Limit-planned isEmpty/head actions and read
-    // its staged files back for their stats ran 16 here.
+    // its staged files back for their stats ran 16 here; the bound is
+    // the 12 of the one-validation, footer-stats path, so a change that
+    // adds a Spark action to the epoch fails here.
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -1326,9 +1352,47 @@ class MergeTableSpec extends AnyFunSuite {
       org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
     } finally sc.removeSparkListener(listener)
     assert(MergeTable.latestVersion(spark, path) == v + 1)
-    assert(jobs.get() > 0 && jobs.get() < 16, s"${jobs.get()} jobs in one steady epoch")
+    assert(jobs.get() > 0 && jobs.get() <= 12, s"${jobs.get()} jobs in one steady epoch")
     val now = MergeTable.read(spark, path).collect()
       .map(r => r.getAs[String]("recid") -> r.getAs[String]("payload")).toMap
     assert(now.size == 197 && now("R0003") == "e4-1" && !now.contains("R0030"))
+  }
+
+  test("no commit adds a zero-row data file: a missed all-delete epoch, a rewrite that deletes every row") {
+    import spark.implicits._
+    val path = tmpDir()
+    MergeTable.create((0 until 40).map(i => (f"REC$i%04d", s"v$i")).toDF("recid", "payload")
+      .repartitionByRange(4, col("recid")), path, statsCol = Some("recid"))
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def entries(): Seq[String] = {
+      val v = MergeTable.latestVersion(spark, path)
+      val in = fs.open(new org.apache.hadoop.fs.Path(path, f"manifest-$v%010d.txt"))
+      val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
+      txt.split("\n").drop(2).filter(_.nonEmpty).map(_.split("\t")(0)).toSeq
+    }
+    def rowsOf(n: String): Long = spark.read.parquet(s"$path/$n").count()
+    val before = entries()
+    assert(before.size == 4 && before.forall(rowsOf(_) > 0))
+    // the all-delete epoch mergeApplySink sends when every key misses:
+    // it still publishes its version, and that version adds no file
+    val v1 = MergeTable.applyBatch(spark, path,
+      Seq.empty[(String, String)].toDF("recid", "payload"), Seq("ZZZ9999").toDF("recid"), "recid")
+    assert(v1 == 1 && entries() == before, s"an epoch that misses must add no file: ${entries()}")
+    // deleting every key of one file rewrites it into nothing
+    val first = MergeTable.read(spark, path).select("recid").as[String].collect().sorted.take(10)
+    val v2 = MergeTable.deleteKeys(spark, path, first.toSeq.toDF("recid"), "recid")
+    assert(v2 == 2 && entries().forall(rowsOf(_) > 0))
+    assert(MergeTable.read(spark, path).count() == 30)
+    // a predicate rewrite whose survivors are all deleted, tracked or not
+    val v3 = MergeTable.deleteWhere(spark, path, lit(true))
+    assert(v3 == 3 && entries().isEmpty, s"an emptied table lists no file: ${entries()}")
+    assert(MergeTable.read(spark, path).count() == 0)
+    val untracked = tmpDir()
+    MergeTable.create((0 until 8).map(i => (i.toLong, s"v$i")).toDF("id", "payload")
+      .repartitionByRange(2, col("id")), untracked)
+    assert(MergeTable.deleteWhere(spark, untracked, lit(true)) == 1)
+    assert(MergeTable.read(spark, untracked).count() == 0 &&
+      MergeTable.read(spark, untracked).inputFiles.isEmpty)
   }
 }
