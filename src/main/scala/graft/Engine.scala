@@ -10,9 +10,12 @@ import org.apache.spark.sql.internal.SQLConf
 import graft.functions.T24
 
 /** Runtime configuration applied idempotently at the head of every
-  * engine entry point. The driver owns SparkSession creation
-  * (Verify/Bench), so anything the engine needs beyond defaults is set
-  * here at runtime rather than at builder time.
+  * engine entry point. graft's own mains (`Bench`, `Verify`,
+  * `StreamDrive`, `GenData`) build their one session with [[session]],
+  * which configures it before returning it; a deployment that builds its
+  * own session calls [[configure]] on it first, so anything the engine
+  * needs beyond defaults is set here at runtime rather than at builder
+  * time.
   *
   * Besides session settings, [[configure]] installs two JVM-level ones,
   * and they must run first: before the session's first `spark.conf` call
@@ -25,6 +28,26 @@ import graft.functions.T24
   *  - [[CodegenCacheEntries]]: a codegen cache that holds a unit's classes.
   */
 object Engine {
+  /** The one session recipe of graft's mains: `local[SPARK_GRAFT_CPUS]`
+    * (default: the machine's cores) with as many shuffle partitions, no
+    * UI, whole-stage codegen fallback off (a Janino compile failure
+    * aborts instead of running interpreted) and the engine's SQL
+    * extensions. It is configured before it is returned, so no caller
+    * plans or touches a file first. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.fallback", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    configure(spark)
+  }
+
   def configure(spark: SparkSession): SparkSession = {
     LocalFiles.install(spark.sparkContext.hadoopConfiguration)
     sizeCodegenCache(spark.sparkContext.getConf)

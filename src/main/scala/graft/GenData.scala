@@ -65,17 +65,10 @@ object GenData {
     val out = args.lift(1).getOrElse("testdata/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
 
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      // the driver's events.ts is TIMESTAMP(NANOS): read it as long
-      // nanos exactly as Engine.session does; the replica is written
-      // as plain INT64, which reads back as the same long either way
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName("graft-gendata")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // configured like every engine session, so the driver's
+    // TIMESTAMP(NANOS) events.ts reads as long nanos; the replica is
+    // written as plain INT64, which reads back as the same long either way
+    val s = Engine.session()
 
     def tbl(n: String) = s.read.parquet(s"$src/$n.parquet")
     def files(rows: Long): Int =

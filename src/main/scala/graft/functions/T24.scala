@@ -36,11 +36,6 @@ object T24 {
     * property-tested in NativePropertySpec). */
   def mvSplit(c: Column): Column = nat(graft.plans.MvMarkerSplit(ex(c)))
 
-  /** The composed regex formulation of [[mvSplit]] — kept as the
-    * property-test oracle for the native expression. */
-  def mvSplitComposed(c: Column): Column =
-    filter(split(c, MvMarker), x => x =!= lit(""))
-
   /** 1-based positional element of a multivalue string (KSQL arrays are
     * 1-based; out-of-range is null, so `try_element_at` — ANSI
     * `element_at` would throw) — reference `controllers/index.js:92-95`. */
@@ -52,12 +47,6 @@ object T24 {
     * string column, so the native `ArrayJoin` is built directly. */
   def mvJoin(c: Column, delim: Column): Column =
     nat(org.apache.spark.sql.catalyst.expressions.ArrayJoin(ex(mvSplit(c)), ex(delim), None))
-
-  /** The composed regex formulation of [[mvJoin]] — property-test
-    * oracle (lead-marker strip + split + filter ≡ one marker scan). */
-  def mvJoinComposed(c: Column, delim: String): Column =
-    array_join(filter(split(regexp_replace(c, MvLead, ""), "#(s?[0-9]+:)?"),
-      x => x =!= lit("")), delim)
 
   /** SEAB_FIELD(x, delim, n): split by delimiter, take the n-th (1-based)
     * component — reference `controllers/index.js:90-91`. Returns null when

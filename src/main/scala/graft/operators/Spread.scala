@@ -44,10 +44,6 @@ object Spread {
   def byKey(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
     df.repartition(fanout(df), cols: _*)
 
-  /** Keyless round-robin `repartition` at the data-aware count. */
-  def roundRobin(df: DataFrame): DataFrame =
-    df.repartition(fanout(df))
-
   /** A leaf whose size statistic is measured, not guessed: a file
     * scan, local rows, a range, or a cache once loaded. */
   private[graft] def measured(leaf: LogicalPlan): Boolean = leaf match {

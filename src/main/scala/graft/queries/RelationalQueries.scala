@@ -20,7 +20,7 @@ import graft.sources.Tables.table
 object RelationalQueries {
 
   private def d4(c: Column): Column = c.cast(DecimalType(18, 4))
-  private val one4 = lit(1).cast(DecimalType(18, 4))
+  private def one4 = lit(1).cast(DecimalType(18, 4))
   /** events.ts (Long, ns) → timestamp at µs precision (matches DuckDB). */
   // integral `div` keeps ns→µs truncation exact (double `/` could misround)
   private def evTs(c: Column): Column = timestamp_micros(expr("ts div 1000"))

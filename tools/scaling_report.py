@@ -13,6 +13,12 @@ measurement noise, and needs a diagnosis before a scaling claim stands
 (VERDICT r5 item 1). Inverted rows (small > big beyond noise) are also
 flagged — Bench re-measures those itself (outliers_small), so any
 survivor here is real.
+
+Produce the artifact with `sbt "runMain graft.Bench"` (suite mode: no
+query names; `graft.Bench <query>...` prints plans and stage tables
+instead and writes no artifact). The artifact's `provenance` block
+(commit, dirty, cpus, java, sf_dirs, time) is printed as the report's
+first line when present.
 """
 import json
 import sys
@@ -56,6 +62,8 @@ def main(path: str) -> None:
     sf1 = b.get("queries_sf1", {})
     if not small and not sf1:
         sys.exit(f"{path} has no secondary pass — not a multi-SF artifact")
+    if b.get("provenance"):
+        print("provenance:", json.dumps(b["provenance"], sort_keys=True))
     bad = 0
     if small:
         bad += report(f"{b.get('sf_small')} -> {b.get('sf')}",
