@@ -69,7 +69,7 @@ object Bench {
     * alone would add the failed attempt's metrics into the retry's row),
     * and its jobs' wall time. Reset per timed run; read only after the
     * listener bus drains. */
-  private final class StageListener extends SparkListener {
+  private[graft] final class StageListener extends SparkListener {
     private val stages = mutable.LinkedHashMap.empty[(Int, Int), Stage]
     private val jobStart = mutable.Map.empty[Int, Long]
     private var jobs = 0
@@ -89,14 +89,24 @@ object Bench {
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val si = e.stageInfo
       val wall = (for (t0 <- si.submissionTime; t1 <- si.completionTime) yield t1 - t0)
-      update(si.stageId, si.attemptNumber())(_.copy(name = si.name.takeWhile(_ != '\n'),
+      update(si.stageId, si.attemptNumber())(_.copy(name = stageName(si),
         tasks = si.numTasks, wallMs = wall.getOrElse(-1L)))
     }
     def reset(): Unit = synchronized { stages.clear(); jobStart.clear(); jobs = 0; jobMs = 0 }
     def timed(sec: Double): Timed = synchronized { Timed(sec, stages.values.toSeq, jobs, jobMs) }
   }
 
-  private val listener = new StageListener
+  private[graft] val listener = new StageListener
+
+  /** A stage's name in the stage table: the plan operators it ran (its
+    * RDDs' operation scopes, e.g. `Exchange, WholeStageCodegen (2), Scan
+    * parquet`), or Spark's call site when no RDD carries a scope — the
+    * call site of an adaptive plan's stage is Spark's own
+    * `$anonfun$withThreadLocalCaptured$2`, which names nothing. */
+  private def stageName(si: StageInfo): String = {
+    val ops = GraftSparkBridge.scopeNames(si)
+    if (ops.isEmpty) si.name.takeWhile(_ != '\n') else ops.mkString(", ")
+  }
 
   /** One measured query: best wall-clock over the adaptive runs, with
     * the stages and jobs of THAT best run (the metrics belong to the
@@ -122,7 +132,7 @@ object Bench {
   // min-of-2 bakes that compilation backlog into whichever query sits
   // there. A failing query must abort the bench loudly — swallowing it
   // would report a crash as the fastest "time" in the suite.
-  private def timeQuery(spark: SparkSession, sfDir: String, name: String): Timed = {
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String, name: String): Timed = {
     val fn = SparkEntry.queries(name)
     def once(): Timed = {
       GraftSparkBridge.drainListenerBus(spark.sparkContext)
@@ -269,11 +279,11 @@ object Bench {
       println(f"[bench] $name: best ${t.sec}%.3f s (spread ${t.spread}%.2f); " +
         f"jobs=${t.jobs}, stages=${t.stages.size}, job wall ${t.jobMs / 1e3}%.3f s, " +
         f"driver gap ${t.sec - t.jobMs / 1e3}%.3f s")
-      println("stage.attempt |                                     name | tasks | wallMs |" +
+      println(f"stage.attempt | ${"name"}%60s | tasks | wallMs |" +
         " taskMs |  gcMs | peakMB | spillMB | shReadMB | shWriteMB | inputMB")
       t.stages.sortBy(-_.wallMs).foreach { s =>
         val id = s"${s.id}.${s.attempt}"
-        println(f"$id%13s | ${s.name.take(40)}%40s | ${s.tasks}%5d | " +
+        println(f"$id%13s | ${s.name.take(60)}%60s | ${s.tasks}%5d | " +
           f"${s.wallMs}%6d | ${s.taskMs}%6d | ${s.gcMs}%5d | ${s.peakMem / 1e6}%6.1f | " +
           f"${s.spill / 1e6}%7.1f | ${s.shRead / 1e6}%8.2f | ${s.shWrite / 1e6}%9.2f | " +
           f"${s.input / 1e6}%7.2f")

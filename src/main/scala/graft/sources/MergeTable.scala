@@ -11,10 +11,13 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Union}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Manifest-based copy-on-write table (SURVEY §2e) — the MERGE/DELETE
   * layer plain parquet directories lack. A table is a directory of
@@ -70,7 +73,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    order-preserving unsigned image of the key (a LONG with its
   *    sign bit flipped, a STRING's first 7 UTF-8 bytes), so one probe
   *    serves both key types and every span up to the whole LONG
-  *    domain.
+  *    domain. A collapsed CDC epoch small enough to hold its keys on
+  *    the driver ([[applyEpoch]]) skips the join: the driver sorts the
+  *    keys by the same images and binary-searches each file's range.
   *  - SCHEMA EVOLUTION: a merge batch may carry NEW columns (never
   *    drop existing ones — an update row replaces its base row, so a
   *    missing column would be an ambiguous partial update). The
@@ -570,40 +575,79 @@ object MergeTable {
     * (NULL delete keys match nothing and are ignored). A single global
     * aggregate answered by `collect()`: no Limit plan, whose generated
     * class numbers its counter from a JVM-wide sequence and so can
-    * never hit the codegen cache. A `collapsed` batch (an epoch already
-    * reduced to latest-per-key, so unique and disjoint by
-    * construction) skips the per-key grouping that proves those two
-    * and is only checked for NULL upsert keys. Each failure mode has
-    * its own message, so a NULL-key batch is not misdiagnosed as
-    * duplicates. Returns whether the batch touches any non-NULL key —
-    * false is an empty batch. */
+    * never hit the codegen cache. Each failure mode has its own
+    * message, so a NULL-key batch is not misdiagnosed as duplicates.
+    * Returns whether the batch touches any non-NULL key — false is an
+    * empty batch. */
   private def checkKeys(upserts: DataFrame, deletes: Option[DataFrame], key: String,
-                        what: String, collapsed: Boolean = false): Boolean = {
+                        what: String): Boolean = {
     val k = col(key)
     val tagged = (upserts.select(k, lit(1L).as("__mt_nu"), lit(0L).as("__mt_nd")) +:
       deletes.toSeq.map(_.select(k, lit(0L).as("__mt_nu"), lit(1L).as("__mt_nd"))))
       .reduce(_.unionByName(_))
-    val perKey =
-      if (collapsed) tagged
-      else tagged.groupBy(k)
-        .agg(sum("__mt_nu").as("__mt_nu"), sum("__mt_nd").as("__mt_nd"))
     val (nu, nd, live) = (col("__mt_nu"), col("__mt_nd"), k.isNotNull)
-    val proofs =
-      if (collapsed) Nil
-      else Seq(count_if(live && nu > 1), count_if(live && nu > 0 && nd > 0))
-    val r = perKey.agg(coalesce(sum(when(k.isNull, nu)), lit(0L)),
-      count_if(live) +: proofs: _*).collect()(0)
-    require(r.getLong(0) == 0,
-      s"$what carries ${r.getLong(0)} NULL '$key' value(s) — NULL merge keys " +
-        "cannot match range pruning or the key join and are not supported")
-    if (!collapsed) {
-      require(r.getLong(2) == 0,
-        s"$what carries duplicate '$key' values — ambiguous merge")
-      require(r.getLong(3) == 0,
-        "a key appears as BOTH upsert and delete in one epoch — collapse the " +
-          "batch to latest-per-key first (apply order would be ambiguous)")
-    }
+    val r = tagged.groupBy(k)
+      .agg(sum("__mt_nu").as("__mt_nu"), sum("__mt_nd").as("__mt_nd"))
+      .agg(coalesce(sum(when(k.isNull, nu)), lit(0L)), count_if(live),
+        count_if(live && nu > 1), count_if(live && nu > 0 && nd > 0)).collect()(0)
+    requireNoNullKeys(r.getLong(0), key, what)
+    require(r.getLong(2) == 0,
+      s"$what carries duplicate '$key' values — ambiguous merge")
+    require(r.getLong(3) == 0,
+      "a key appears as BOTH upsert and delete in one epoch — collapse the " +
+        "batch to latest-per-key first (apply order would be ambiguous)")
     r.getLong(1) > 0
+  }
+
+  private def requireNoNullKeys(n: Long, key: String, what: String): Unit =
+    require(n == 0,
+      s"$what carries $n NULL '$key' value(s) — NULL merge keys " +
+        "cannot match range pruning or the key join and are not supported")
+
+  /** Most touched keys a collapsed epoch hands to the driver
+    * ([[applyEpoch]]): 2^16 LONG or short STRING keys are a few MB on
+    * the driver and in one `InSet`. */
+  private[graft] val SmallEpochKeys = 1 << 16
+
+  /** What the first action of a collapsed epoch learns about its keys:
+    * how many non-NULL keys it touches (upserts and deletes), how many
+    * upsert keys are NULL, and — when `live` is at most the bound the
+    * action ran under — the touched keys themselves (Long or String). */
+  private final case class EpochKeys(live: Long, nullUps: Long, keys: Option[Seq[Any]])
+
+  /** ONE Spark action over a collapsed epoch's (key, is-delete) pairs
+    * ([[EpochKeys]]; a NULL is-delete belongs to neither side). Each
+    * task returns its counts and at most `bound + 1` keys, so nothing
+    * above the bound reaches the driver; keys of a type the manifest
+    * cannot range over are never collected. It runs as a plain
+    * `mapPartitions` under its own SQL execution: no Limit plan (see
+    * [[checkKeys]]), and no per-epoch literal in generated code. */
+  private def epochKeys(epoch: DataFrame, key: String, isDelete: Column,
+                        bound: Int): EpochKeys = {
+    val pairs = epoch.select(col(key), isDelete)
+    val dt = pairs.schema(0).dataType
+    val take = if (dt == LongType || dt == StringType) bound + 1 else 0
+    val isStr = dt == StringType
+    val qe = pairs.queryExecution
+    val parts = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.execute().mapPartitions { rows =>
+        var live = 0L
+        var nullUps = 0L
+        val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
+        rows.filterNot(_.isNullAt(1)).foreach { r =>
+          if (r.isNullAt(0)) { if (!r.getBoolean(1)) nullUps += 1 }
+          else {
+            live += 1
+            if (keys.size < take)
+              keys += (if (isStr) r.getUTF8String(0).toString else r.getLong(0))
+          }
+        }
+        Iterator((live, nullUps, keys.toArray))
+      }.collect()
+    }
+    val live = parts.map(_._1).sum
+    EpochKeys(live, parts.map(_._2).sum,
+      Some(parts.toSeq.flatMap(_._3)).filter(_.size == live && live <= bound))
   }
 
   /** Create a table at `path` from `df` as version 0. Pass the merge
@@ -832,15 +876,12 @@ object MergeTable {
     * after the hash match. Same answer as a per-key theta join of all
     * ranges (the residual makes it exact), but the work per key is the
     * files overlapping ONE bin, not all files. Inverted (`mn > mx`)
-    * LONG ranges hold nothing and never match. */
+    * LONG ranges hold nothing and never match; [[NoStats]] files have
+    * no metadata to prune on and are always candidates. */
   private[graft] def rangeCandidates(keys: DataFrame, key: String,
                                      ranged: Seq[(String, Stats)]): Set[String] = {
-    val live = ranged.collect {
-      case (n, LongRange(a, b)) if a <= b =>
-        (n, a: Any, b: Any, a ^ Long.MinValue, b ^ Long.MinValue)
-      case (n, StrRange(a, b)) => (n, a: Any, b: Any, u56(a), u56(b))
-    }
-    if (live.isEmpty) return Set.empty
+    val live = imaged(ranged)
+    if (live.isEmpty) return unranged(ranged)
     val isStr = live.head._2.isInstanceOf[String]
     val unsigned = Ordering.fromLessThan[Long](java.lang.Long.compareUnsigned(_, _) < 0)
     val span = live.map(_._5).max(unsigned) - live.map(_._4).min(unsigned)
@@ -865,7 +906,51 @@ object MergeTable {
       .join(broadcast(raster), Seq("__mt_bin"))
       .filter(k >= col("__mt_mn") && k <= col("__mt_mx"))
       .select("__mt_name").distinct()
-      .collect().map(_.getString(0)).toSet
+      .collect().map(_.getString(0)).toSet ++ unranged(ranged)
+  }
+
+  /** The ranges a key can fall in, as (name, typed min, typed max, and
+    * the order-preserving unsigned images of both): a LONG with its sign
+    * bit flipped, a STRING's [[u56]]. Inverted LONG ranges and
+    * [[EmptyRange]] hold nothing; [[NoStats]] is [[unranged]]. */
+  private def imaged(ranged: Seq[(String, Stats)]): Seq[(String, Any, Any, Long, Long)] =
+    ranged.collect {
+      case (n, LongRange(a, b)) if a <= b =>
+        (n, a: Any, b: Any, a ^ Long.MinValue, b ^ Long.MinValue)
+      case (n, StrRange(a, b)) => (n, a: Any, b: Any, u56(a), u56(b))
+    }
+
+  private def unranged(ranged: Seq[(String, Stats)]): Set[String] =
+    ranged.collect { case (n, NoStats) => n }.toSet
+
+  /** [[rangeCandidates]] for a key set the DRIVER holds (a small
+    * collapsed epoch, [[applyEpoch]]): no Spark job. The keys sort by
+    * their unsigned image, ties by the exact typed order (images
+    * preserve it, so this is the typed order); each file binary-searches
+    * its first key at or above its typed min, and is a candidate when
+    * that key is at or below its typed max — the exact residual. Same
+    * answer as the binned probe and the theta join. */
+  private[graft] def keyCandidates(keys: Seq[Any], ranged: Seq[(String, Stats)]): Set[String] = {
+    val live = imaged(ranged)
+    if (live.isEmpty || keys.isEmpty) return unranged(ranged)
+    val isStr = live.head._2.isInstanceOf[String]
+    val cmp: (Any, Any) => Int =
+      if (isStr) (a, b) => utf8Cmp(a.asInstanceOf[String], b.asInstanceOf[String])
+      else (a, b) => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
+    def before(x: (Long, Any), y: (Long, Any)): Boolean = {
+      val c = java.lang.Long.compareUnsigned(x._1, y._1)
+      c < 0 || c == 0 && cmp(x._2, y._2) < 0
+    }
+    val sorted = keys.map(k => (if (isStr) u56(k.asInstanceOf[String])
+      else k.asInstanceOf[Long] ^ Long.MinValue, k)).toArray.sortWith(before)
+    live.filter { case (_, mn, mx, lo, _) =>
+      var (a, b) = (0, sorted.length)
+      while (a < b) {
+        val m = (a + b) >>> 1
+        if (before(sorted(m), (lo, mn))) a = m + 1 else b = m
+      }
+      a < sorted.length && cmp(sorted(a)._2, mx) <= 0
+    }.map(_._1).toSet ++ unranged(ranged)
   }
 
   /** First 7 UTF-8 bytes of a string, zero-padded, as a non-negative
@@ -904,10 +989,7 @@ object MergeTable {
     h.m.statsCol match {
       case Some(c) if c == key =>
         val hit = rangeCandidates(keys, key, h.m.entries.map(e => e.name -> e.stats))
-        // entries with no metadata at all stay conservative
-        // candidates; EmptyRange prunes by construction
-        h.m.entries.filter(e => hit.contains(e.name)) ++
-          h.m.entries.filter(_.stats == NoStats)
+        h.m.entries.filter(e => hit(e.name))
       case _ =>
         val hitNames = baseNames(h.rows(h.m.entries, withFileCol = true)
           .join(keys.select(col(key)).distinct(), Seq(key)))
@@ -951,8 +1033,9 @@ object MergeTable {
   }
 
   /** Lay out a tracked table's rewrite: one that fits in
-    * [[SmallFileBytes]] lands as ONE file, through a single-partition
-    * exchange (no sampling job). A steady epoch's hot range then stays
+    * [[SmallFileBytes]] lands as ONE file, by coalescing the rows into
+    * one partition (no exchange, no sampling job — the write stays one
+    * shuffle-free stage). A steady epoch's hot range then stays
     * in one file, and the next epoch on the same keys hits that file
     * alone, not every file a parallel write spread them over. Bytes are
     * the hit files' lengths plus the upserts' [[measuredBytes]] (none
@@ -965,7 +1048,7 @@ object MergeTable {
                      h: Head): DataFrame = {
     def small = ups.fold(Option(BigInt(0)))(measuredBytes)
       .exists(_ + hits.map(h.len).sum <= SmallFileBytes)
-    if (h.m.statsCol.isDefined && small) rows.repartition(1) else rows
+    if (h.m.statsCol.isDefined && small) rows.coalesce(1) else rows
   }
 
   /** The ONE copy-on-write rewrite: the rows of the `hits` files that
@@ -991,18 +1074,40 @@ object MergeTable {
     * stats column — found WITHOUT scanning the base) of the upsert keys
     * plus the non-NULL `deletes` keys go through [[rewrite]], keeping
     * the rows whose key neither side names. `empty` (no key touched)
-    * commits nothing and returns the current version. */
+    * commits nothing and returns the current version.
+    *
+    * `driverKeys`, when the caller already holds every touched key
+    * ([[applyEpoch]]'s small path) and the key is the tracked stats
+    * column, finds the candidates on the driver ([[keyCandidates]])
+    * and keeps the survivors with an `InSet` of those keys — no probe
+    * job and no anti-join. Otherwise the candidates come from
+    * [[candidateFiles]] and the survivors from a `left_anti` join with
+    * the touched keys. Both give the same hits and the same rows. */
   private def commitUpserts(spark: SparkSession, path: String, what: String,
                             upserts: Option[DataFrame], deletes: Option[DataFrame],
-                            key: String, empty: Boolean = false): Int =
+                            key: String, empty: Boolean = false,
+                            driverKeys: Option[Seq[Any]] = None): Int =
     commit(spark, path, s"$what $path") { h =>
       val schema = upserts.fold(h.schema)(evolvedSchema(h.schema, _))
       if (empty) Left(h.v)
       else {
         val ups = upserts.map(_.select(schema.fieldNames.map(col).toIndexedSeq: _*))
-        val touched = (ups.map(_.select(col(key))) ++ deletes).reduce(_.unionByName(_))
-        Right(rewrite(h, schema, candidateFiles(h, touched, key),
-          _.join(touched, Seq(key), "left_anti"), ups))
+        val (hits, survive) = driverKeys.filter(_ => h.m.statsCol.contains(key)) match {
+          case Some(ks) =>
+            val hit = keyCandidates(ks, h.m.entries.map(e => e.name -> e.stats))
+            // InSet holds Catalyst values and codegens as a reference to
+            // the set, so the survivor filter's class is the same every
+            // epoch whatever the keys
+            val touched = GraftBridge.column(InSet(GraftBridge.expression(col(key)),
+              ks.map { case s: String => UTF8String.fromString(s); case k => k }.toSet))
+            (h.m.entries.filter(e => hit(e.name)),
+              (rows: DataFrame) => rows.filter(col(key).isNull || !touched))
+          case None =>
+            val touched = (ups.map(_.select(col(key))) ++ deletes).reduce(_.unionByName(_))
+            (candidateFiles(h, touched, key),
+              (rows: DataFrame) => rows.join(touched, Seq(key), "left_anti"))
+        }
+        Right(rewrite(h, schema, hits, survive, ups))
       }
     }
 
@@ -1047,25 +1152,39 @@ object MergeTable {
     * and emptiness together — [[checkKeys]]), the candidate probe's
     * collect, and the staging write ([[layout]]: one file for a small
     * rewrite); file stats come from the written footers ([[stage]]).
-    * An empty epoch stops after the first. */
+    * An empty epoch stops after the first. An epoch already collapsed
+    * to latest-per-key takes [[applyEpoch]]: one action and, while it
+    * is small, no probe job. */
   def applyBatch(spark: SparkSession, path: String, upserts: DataFrame,
-                 deletes: DataFrame, key: String): Int =
-    applyEpoch(spark, path, upserts, deletes, key, collapsed = false)
-
-  /** [[applyBatch]], or with `collapsed` the form for an epoch already
-    * reduced to latest-per-key (the `mergeApplySink` shape), whose keys
-    * are unique and whose upserts and deletes are disjoint by
-    * construction: its validation aggregate skips proving those two
-    * and still rejects NULL upsert keys, and an empty epoch still
-    * commits nothing. */
-  private[graft] def applyEpoch(spark: SparkSession, path: String,
-                                upserts: DataFrame, deletes: DataFrame,
-                                key: String, collapsed: Boolean): Int = {
-    val dels0 = deletes.select(col(key)).na.drop()
-    val dels = if (collapsed) dels0 else dels0.distinct()
-    val nonEmpty = checkKeys(upserts, Some(dels), key, "upserts", collapsed)
+                 deletes: DataFrame, key: String): Int = {
+    val dels = deletes.select(col(key)).na.drop().distinct()
+    val nonEmpty = checkKeys(upserts, Some(dels), key, "upserts")
     commitUpserts(spark, path, "applyBatch into", Some(upserts), Some(dels), key,
       empty = !nonEmpty)
+  }
+
+  /** [[applyBatch]] for an `epoch` already reduced to latest-per-key
+    * (the `mergeApplySink` shape), split on its `op` column: rows whose
+    * `op` is `deleteOp` delete their key, rows with any other non-NULL
+    * `op` upsert (without the `op` column). Keys are unique and the two
+    * sides disjoint by construction, so neither needs proving. ONE
+    * first action ([[epochKeys]]) reads the epoch's keys — filling the
+    * caller's cache of the collapse — and answers NULL upsert keys
+    * (rejected, nothing committed) and emptiness (nothing committed).
+    * An epoch touching at most `smallKeys` keys hands them to the
+    * commit, which finds its candidates on the driver, keeps survivors
+    * with an `InSet` and stages once; a larger one runs the binned probe
+    * and the anti-join ([[commitUpserts]]). The sink passes
+    * [[SmallEpochKeys]] as `smallKeys`; -1 forces the large path. */
+  private[graft] def applyEpoch(spark: SparkSession, path: String, epoch: DataFrame,
+                                key: String, op: String, deleteOp: String,
+                                smallKeys: Int): Int = {
+    val isDelete = col(op) === deleteOp
+    val ek = epochKeys(epoch, key, isDelete, smallKeys)
+    requireNoNullKeys(ek.nullUps, key, "upserts")
+    commitUpserts(spark, path, "applyBatch into", Some(epoch.filter(!isDelete).drop(op)),
+      Some(epoch.filter(isDelete).select(col(key)).na.drop()), key,
+      empty = ek.live == 0, driverKeys = ek.keys)
   }
 
   /** COW DELETE BY KEY SET: like [[deleteWhere]] but the doomed keys

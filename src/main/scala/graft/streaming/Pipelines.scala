@@ -1204,20 +1204,33 @@ object Pipelines {
     * ONE COMMIT PER EPOCH: the collapsed batch PERSISTS for the
     * epoch's duration (it feeds the upsert/delete splits and the
     * apply — without the cache each would re-run the groupBy), and
-    * upserts + deletes land through `MergeTable.applyBatch`'s
-    * collapsed form as a SINGLE manifest version, in three Spark
-    * actions: one validation aggregate (which also fills the cache;
-    * the collapse already makes keys unique and the two sides
-    * disjoint, so only NULL keys and emptiness are checked — an empty
-    * epoch stops here and publishes nothing), one candidate probe and
-    * one staging write (a single file while the rewrite is small)
-    * whose file stats come from the written footers. (The creating epoch's delete markers match
+    * upserts + deletes land through `MergeTable.applyEpoch` (the
+    * collapsed form of `applyBatch`) as a SINGLE manifest version. Its
+    * first Spark action reads the epoch's keys and fills the cache; the
+    * collapse already makes keys unique and the two sides disjoint, so
+    * only NULL keys and emptiness are checked — an empty epoch stops
+    * there and publishes nothing. A small epoch's keys reach the
+    * driver, which finds the candidate files from the manifest alone,
+    * and ONE shuffle-free staging write follows (a single file while
+    * the rewrite is small), its file stats read from the written
+    * footers. A steady epoch runs four Spark jobs: the collapse's
+    * shuffle stage, the cache fill (adaptive execution runs it as a
+    * stage of its own), the key-reading action and the write. A large
+    * epoch probes and anti-joins in Spark instead. (The creating epoch's delete markers match
     * nothing by construction — the collapse leaves each key either
     * upsert or delete, and the table holds only the epoch's own
     * upserts.) */
   def mergeApplySink(path: String, keyCol: String, tsCol: String,
                      opCol: String = "op",
                      deleteOp: String = "D"): (DataFrame, Long) => Unit =
+    applySink(path, keyCol, tsCol, opCol, deleteOp,
+      graft.sources.MergeTable.SmallEpochKeys)
+
+  /** [[mergeApplySink]] with the small-epoch bound of
+    * `MergeTable.applyEpoch` explicit: -1 forces the large path. */
+  private[graft] def applySink(path: String, keyCol: String, tsCol: String,
+                               opCol: String, deleteOp: String,
+                               smallKeys: Int): (DataFrame, Long) => Unit =
     (batch, _) => {
       import graft.sources.MergeTable
       val spark = batch.sparkSession
@@ -1225,20 +1238,18 @@ object Pipelines {
         .filter(c => c != keyCol && c != tsCol)
       val latest = latestPerKey(batch, keyCol, tsCol, valueCols).persist()
       try {
-        val dels = latest.filter(col(opCol) === deleteOp)
-          .select(col(keyCol))
-        val ups = latest.filter(col(opCol) =!= deleteOp).drop(opCol)
-        // track per-file key ranges when the key supports them (LONG,
-        // or STRING — the T24 RECID shape): applies then find
-        // candidate files from manifest metadata alone instead of a
-        // per-epoch base scan
-        val stats = Some(keyCol).filter(k =>
-          ups.schema(k).dataType == org.apache.spark.sql.types.LongType ||
-            ups.schema(k).dataType == org.apache.spark.sql.types.StringType)
-        if (MergeTable.latestVersion(spark, path) < 0)
+        if (MergeTable.latestVersion(spark, path) < 0) {
+          val ups = latest.filter(col(opCol) =!= deleteOp).drop(opCol)
+          // track per-file key ranges when the key supports them (LONG,
+          // or STRING — the T24 RECID shape): applies then find
+          // candidate files from manifest metadata alone instead of a
+          // per-epoch base scan
+          val stats = Some(keyCol).filter(k =>
+            ups.schema(k).dataType == org.apache.spark.sql.types.LongType ||
+              ups.schema(k).dataType == org.apache.spark.sql.types.StringType)
           MergeTable.create(ups, path, statsCol = stats)
-        else
-          MergeTable.applyEpoch(spark, path, ups, dels, keyCol, collapsed = true)
+        } else
+          MergeTable.applyEpoch(spark, path, latest, keyCol, opCol, deleteOp, smallKeys)
       } finally latest.unpersist()
     }
 

@@ -8,7 +8,8 @@ import graft.Bench.{Suite, Timed}
 
 /** `Bench.splicePasses`: the suite's five re-measure passes flag the rows
   * their thresholds name, in their order, and a re-measure replaces a
-  * row only when it is faster. */
+  * row only when it is faster. And query mode's stage table names each
+  * stage after the plan operators it ran. */
 class BenchSpliceSpec extends AnyFunSuite {
   private def suite(dir: String, rows: (String, Double)*): Suite =
     Suite(dir, rows.map { case (n, s) => n -> Timed(s) }.toMap)
@@ -87,5 +88,15 @@ class BenchSpliceSpec extends AnyFunSuite {
       Bench.splicePasses(None, suite("m", rows: _*), None, (_, _) => Timed(0.1))
     assert(blocks.keySet == Set("outliers_expensive"))
     assert(blocks("outliers_expensive").keySet == (5 to 20).map(i => f"q$i%02d").toSet)
+  }
+
+  test("the stage table names each stage after its plan operators: a join's names an exchange") {
+    val spark = SparkTest.spark
+    spark.sparkContext.addSparkListener(Bench.listener)
+    val t = try Bench.timeQuery(spark, SparkTest.sf, "q3_join_revenue")
+      finally spark.sparkContext.removeSparkListener(Bench.listener)
+    val names = t.stages.map(_.name)
+    assert(names.nonEmpty && names.exists(_.contains("Exchange")), names)
+    assert(!names.exists(_.contains("withThreadLocalCaptured")), names)
   }
 }

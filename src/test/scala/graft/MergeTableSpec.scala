@@ -346,6 +346,27 @@ class MergeTableSpec extends AnyFunSuite {
       .select("name").distinct()
       .collect().map(_.getString(0)).toSet
 
+  /** Both candidate probes — the binned Spark join and the driver-side
+    * search over the collected keys — against the theta oracle over the
+    * `ranges`, with every NoStats entry of `unranged` a conservative
+    * candidate and EmptyRange entries never one. Returns the answer. */
+  private def probesEqualTheta(keys: org.apache.spark.sql.DataFrame,
+                               ranges: Seq[(String, MergeTable.Stats)],
+                               theta: org.apache.spark.sql.DataFrame,
+                               unranged: Seq[(String, MergeTable.Stats)]): Set[String] = {
+    val entries = ranges ++ unranged
+    val want = thetaCandidates(keys, theta) ++
+      unranged.collect { case (n, MergeTable.NoStats) => n }
+    val binned = MergeTable.rangeCandidates(keys, "k", entries)
+    val driver = MergeTable.keyCandidates(
+      keys.select("k").na.drop().distinct().collect().map(_.get(0)).toSeq, entries)
+    assert(binned == want, s"binned probe mismatch: ${binned.diff(want)} / ${want.diff(binned)}")
+    assert(driver == want, s"driver probe mismatch: ${driver.diff(want)} / ${want.diff(driver)}")
+    want
+  }
+
+  private val unranged = Seq("nostats" -> MergeTable.NoStats, "emptyrange" -> MergeTable.EmptyRange)
+
   test("binned range probe candidates equal the theta probe, any range shape") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
@@ -356,9 +377,12 @@ class MergeTableSpec extends AnyFunSuite {
       } ++
       Seq(("wide", 0L, 100500L),          // spans everything
         ("point", 77777L, 77777L),        // single key
+        ("bounds", 200000L, 200010L),     // hit only on its exact bounds
+        ("under", 200011L, 200020L),      // between two keys: no hit
         ("empty", Long.MaxValue, Long.MinValue)) // zero-row file sentinel
     val keys = ((0 until 2000).map(_ => Some(rnd.nextInt(110000).toLong)) ++
-      Seq(None, Some(77777L), Some(77777L))).toDF("k") // nulls + dups
+      Seq(None, Some(77777L), Some(77777L), Some(200000L), Some(200010L), Some(200021L)))
+      .toDF("k") // nulls + dups
     // the same inputs plus ranges reaching both ends of the LONG domain
     // (a span over 2^62) and keys at both extremes
     val extremes = Seq(("lowest", Long.MinValue, Long.MinValue + 10),
@@ -369,13 +393,11 @@ class MergeTableSpec extends AnyFunSuite {
       Long.MaxValue - 1, Long.MaxValue).map(Option(_)).toDF("k")
     val found = Seq((entries, keys), (entries ++ extremes, keys.union(extremeKeys))).map {
       case (es, ks) =>
-        val binned = MergeTable.rangeCandidates(ks, "k",
-          es.map(e => e._1 -> MergeTable.LongRange(e._2, e._3)))
-        val theta = thetaCandidates(ks, es.toDF("name", "mn", "mx"))
-        assert(binned == theta, s"probe mismatch: ${binned.diff(theta)} / ${theta.diff(binned)}")
-        assert(binned.contains("wide") && binned.contains("point") &&
-          !binned.contains("empty"))
-        binned
+        val got = probesEqualTheta(ks, es.map(e => e._1 -> MergeTable.LongRange(e._2, e._3)),
+          es.toDF("name", "mn", "mx"), unranged)
+        assert(Seq("wide", "point", "bounds", "nostats").forall(got.contains) &&
+          !got.contains("empty") && !got.contains("under") && !got.contains("emptyrange"))
+        got
     }
     assert(extremes.map(_._1).forall(found.last.contains))
   }
@@ -385,24 +407,32 @@ class MergeTableSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     def key(i: Int): String = f"REC${rnd.nextInt(90000) + 10000}%d.$i%04d"
     // ranges incl. shared >7-byte prefixes (same u56 bin, residual
-    // must decide), a point range, and a full-span range
+    // must decide), a point range, a full-span range, keys on exact
+    // bounds, and non-ASCII UTF-8 (byte order, not UTF-16 order: the
+    // supplementary character sorts above U+FFFD)
     val entries =
       (0 until 200).map { i =>
         val a = key(i); val b = key(i)
         (s"f$i", if (a <= b) a else b, if (a <= b) b else a)
       } ++ Seq(
         ("prefixed", "REC55555.0000AAAA", "REC55555.0000BBBB"),
+        ("prefix-miss", "REC55555.0000CCCC", "REC55555.0000DDDD"),
         ("point", "REC77777.0042", "REC77777.0042"),
+        ("bounds", "REC88888.0000", "REC88888.9999"),
+        ("cafe", "caf\u00e9", "caf\u00e9\u00e9"),
+        ("astral", "\ud83d\ude00", "\ud83d\ude00z"),
+        ("bmp-high", "\ufffd", "\ufffdz"),
         ("wide", "", "ZZZZZZZZZZ"))
     val keys = ((0 until 3000).map(i => Some(key(i))) ++
-      Seq(None, Some("REC77777.0042"), Some("REC55555.0000ABCD"))).toDF("k")
-    val binned = MergeTable.rangeCandidates(keys, "k",
-      entries.map(e => e._1 -> MergeTable.StrRange(e._2, e._3)))
-    val theta = thetaCandidates(keys, entries.toDF("name", "mn", "mx"))
-    assert(binned == theta,
-      s"probe mismatch: ${binned.diff(theta)} / ${theta.diff(binned)}")
-    assert(binned.contains("wide") && binned.contains("point") &&
-      binned.contains("prefixed"))
+      Seq(None, Some("REC77777.0042"), Some("REC55555.0000ABCD"), Some("REC88888.9999"),
+        Some("caf\u00e9"), Some("\ud83d\ude00y"))).toDF("k")
+    val got = probesEqualTheta(keys,
+      entries.map(e => e._1 -> MergeTable.StrRange(e._2, e._3)),
+      entries.toDF("name", "mn", "mx"), unranged)
+    assert(Seq("wide", "point", "prefixed", "bounds", "cafe", "astral", "nostats")
+      .forall(got.contains))
+    assert(!got.contains("prefix-miss") && !got.contains("bmp-high") &&
+      !got.contains("emptyrange"))
   }
 
   test("STRING merge keys: tracked ranges prune, non-candidates never open") {
@@ -1332,30 +1362,120 @@ class MergeTableSpec extends AnyFunSuite {
     sink(epoch(Nil), 3L)
     assert(MergeTable.latestVersion(spark, path) == v)
     // one steady epoch's Spark jobs, counted under its own job group:
-    // validation, candidate probe and staging write (each shuffle
-    // stage is its own job under AQE). The path that proved uniqueness
-    // and disjointness with Limit-planned isEmpty/head actions and read
-    // its staged files back for their stats ran 16 here; the bound is
-    // the 12 of the one-validation, footer-stats path, so a change that
-    // adds a Spark action to the epoch fails here.
+    // the collapse's shuffle stage, the cache fill (AQE runs it as its
+    // own table-cache stage), the one key-reading action and the one
+    // shuffle-free staging write — 4. The path with a validation
+    // aggregate, a binned probe and an anti-join ran 11 here; replayed
+    // through the forced large path (the same first action, then the
+    // binned probe and the anti-join), the same epoch stays under that
+    // path's 12. A change that adds a Spark action to either path fails
+    // here.
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "mt-steady"))
-          jobs.incrementAndGet()
+    def jobs(f: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "mt-steady"))
+            n.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("mt-steady", "one steady sink epoch")
+        try f finally sc.clearJobGroup()
+        org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      } finally sc.removeSparkListener(listener)
+      n.get()
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("mt-steady", "one steady sink epoch")
-      try sink(steady(4L), 4L) finally sc.clearJobGroup()
-      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(MergeTable.latestVersion(spark, path) == v + 1)
-    assert(jobs.get() > 0 && jobs.get() <= 12, s"${jobs.get()} jobs in one steady epoch")
-    val now = MergeTable.read(spark, path).collect()
+    def now() = MergeTable.read(spark, path).collect()
       .map(r => r.getAs[String]("recid") -> r.getAs[String]("payload")).toMap
-    assert(now.size == 197 && now("R0003") == "e4-1" && !now.contains("R0030"))
+    val small = jobs(sink(steady(4L), 4L))
+    assert(MergeTable.latestVersion(spark, path) == v + 1)
+    assert(small > 0 && small <= 4, s"$small jobs in one steady epoch")
+    val after = now()
+    assert(after.size == 197 && after("R0003") == "e4-1" && !after.contains("R0030"))
+    val large = jobs(graft.streaming.Pipelines.applySink(path, "recid", "ts", "op", "D",
+      smallKeys = -1)(steady(4L), 4L))
+    assert(MergeTable.latestVersion(spark, path) == v + 2)
+    assert(large > small && large <= 12, s"$large jobs in one steady epoch, large path")
+    assert(now() == after)
+  }
+
+  /** Every line of the latest manifest of `path` past the header, split
+    * into the file name and the rest (its stats). */
+  private def manifestEntries(path: String): Seq[(String, String)] = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v = MergeTable.latestVersion(spark, path)
+    val in = fs.open(new org.apache.hadoop.fs.Path(path, f"manifest-$v%010d.txt"))
+    val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
+    txt.split("\n").drop(2).filter(_.nonEmpty).map { l =>
+      val p = l.split("\t", 2); p(0) -> p.lift(1).getOrElse("")
+    }.toSeq
+  }
+
+  test("a collapsed epoch applies the same through the driver-side probe and the large path") {
+    import spark.implicits._
+    import graft.operators.IncrementalView
+    val root = Files.createTempDirectory("mt_paths").toString
+    val seedPath = s"$root/seed"
+    MergeTable.create((0 until 120).map(i => (f"R$i%04d", 1L, s"g${i % 3}", i.toDouble))
+      .toDF("recid", "ts", "grp", "amt").repartitionByRange(4, col("recid")),
+      seedPath, statsCol = Some("recid"))
+    val seeded = manifestEntries(seedPath).map(_._1).toSet
+    // two copies of one table: the same file names to carry over
+    val sides = Seq("driver" -> MergeTable.SmallEpochKeys, "large" -> -1).map { case (n, bound) =>
+      val (src, p) = (java.nio.file.Paths.get(seedPath), s"$root/$n")
+      Files.walk(src).forEach { f =>
+        val to = java.nio.file.Paths.get(p).resolve(src.relativize(f))
+        if (Files.isDirectory(f)) Files.createDirectories(to) else Files.copy(f, to)
+      }
+      IncrementalView.maintain(spark, p, s"$root/$n-mv", "recid", "grp", "amt")
+      (p, s"$root/$n-mv", graft.streaming.Pipelines.applySink(p, "recid", "ts", "op", "D", bound))
+    }
+    def epoch(rows: (Option[String], Long, String, String, Double)*) =
+      rows.toDF("recid", "ts", "op", "grp", "amt")
+    def apply(e: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      sides.foreach { case (p, mv, sink) =>
+        sink(e, id)
+        IncrementalView.maintain(spark, p, mv, "recid", "grp", "amt")
+      }
+    def same(): Unit = {
+      val Seq(a, b) = sides.map { case (p, mv, _) =>
+        val m = manifestEntries(p)
+        (MergeTable.latestVersion(spark, p),
+          MergeTable.read(spark, p).collect().map(_.toSeq).toSet,
+          m.map(_._1).filter(seeded).toSet, m.map(_._2).sorted,
+          IncrementalView.read(spark, mv).collect().map(_.toSeq).toSet)
+      }
+      assert(a == b, s"the two paths diverge:\n$a\n$b")
+    }
+    same()
+    // upserts (updates, an update of the same key twice, inserts) and deletes
+    apply(epoch((Some("R0005"), 2L, "U", "g0", 50.0), (Some("R0005"), 3L, "U", "g1", 51.0),
+      (Some("R0006"), 2L, "D", "g0", 0.0), (Some("R0007a"), 2L, "U", "g2", 7.5),
+      (Some("R0100"), 2L, "U", "g9", 1.0), (Some("R9999"), 2L, "U", "g0", 2.0)), 1L)
+    same()
+    // deletes of absent keys, inside a file's range and past every range
+    apply(epoch((Some("R0006"), 4L, "D", "g0", 0.0), (Some("R0050a"), 4L, "D", "g0", 0.0),
+      (Some("S0000"), 4L, "D", "g0", 0.0)), 2L)
+    same()
+    val v = sides.map(s => MergeTable.latestVersion(spark, s._1))
+    // an empty epoch publishes no version on either path
+    apply(epoch(), 3L)
+    same()
+    // a NULL upsert key: the same rejection, and nothing published
+    val msgs = sides.map { case (_, _, sink) =>
+      intercept[IllegalArgumentException] {
+        sink(epoch((None, 5L, "U", "g0", 1.0), (Some("R0001"), 5L, "U", "g0", 1.0)), 4L)
+      }.getMessage
+    }
+    assert(msgs.distinct.size == 1 && msgs.head.contains("NULL"), s"got: $msgs")
+    assert(sides.map(s => MergeTable.latestVersion(spark, s._1)) == v)
+    same()
+    val last = MergeTable.read(spark, sides.head._1).collect()
+      .map(r => r.getAs[String]("recid") -> r.getAs[Double]("amt")).toMap
+    assert(last.size == 121 && last("R0005") == 51.0 && !last.contains("R0006") &&
+      last("R0007a") == 7.5 && last("R9999") == 2.0)
   }
 
   test("no commit adds a zero-row data file: a missed all-delete epoch, a rewrite that deletes every row") {
